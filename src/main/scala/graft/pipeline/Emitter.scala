@@ -2,10 +2,10 @@ package graft.pipeline
 
 import java.time.Instant
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
+import org.apache.hadoop.io.IOUtils
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Tstamps
 
@@ -25,11 +25,17 @@ import graft.functions.Tstamps
   *      synchronous, an upgrade over the reference's fire-and-forget
   *      KinesisSink.scala:97-107 (SURVEY §7.5.5).
   *
-  * Scale notes (100 TB): the per-partition-value coalesce in exact-naming
-  * mode serializes each partition value through one task — correct for
-  * reference parity, a bottleneck for hot schemas at cluster scale. Set
-  * `exactNaming=false` to keep Spark's parallel file naming (many part
-  * files per partition, no rename step, no extra shuffle): the content
+  * Scale notes: the batch meta (seq range, count, bad count, earliest
+  * collector tstamp — reference Batch.scala:36-43, accumulated while
+  * buffering) is an `Observation` on the write itself, so a flush with
+  * good rows only is ONE scan and one write job. With one row type, a
+  * codec without a post-commit index (gzip, bzip2) and a cluster-local
+  * output (`file`, `hdfs`), every flush partition writes its own part
+  * file and the commit concatenates them into the one reference object;
+  * otherwise exact naming repartitions by row type, which sends each row
+  * type through one task (a bottleneck for hot schemas at cluster
+  * scale). Set `exactNaming=false` to keep Spark's parallel file
+  * naming (many part files per partition, no extra shuffle): the content
   * contract (gzip, newline-framed, partition-dir layout) is identical.
   * Writes stage into `_staging/batch=N` and move atomically per file, so
   * batch retries never leave partial output under the final prefix.
@@ -40,12 +46,10 @@ object Emitter {
     count: Long,
     badCount: Long,
     earliestTstamp: Option[Instant],
-    files: Seq[String])
+    files: Seq[String]) {
+    def meta: StatsD.Meta = StatsD.Meta(earliestTstamp, count)
+  }
 
-  /** @param df  batch frame with columns `value: string` (the record),
-    *            `seq: any` (ordering id for file naming; nullable),
-    *            `error: array<string>` (null = good record)
-    */
   /** Fixed backoff between output retries (reference
     * KinesisS3Emitter.scala:194-198: 10 000 ms); overridable for tests. */
   @volatile var retryBackoffMs: Long = 10000L
@@ -68,101 +72,103 @@ object Emitter {
     attempt()
   }
 
+  /** @param df  batch frame with columns `value: string` (the record),
+    *            `seq: any` (ordering id for file naming; nullable),
+    *            `error: array<string>` (null = good record)
+    * @param observeEarliest for Enriched, also observe the earliest
+    *            collector tstamp (`BatchResult.earliestTstamp`)
+    */
   def emitBatch(
     df: DataFrame,
     config: PipelineConfig,
     batchId: Long,
     now: Instant = Instant.now(),
     exactNaming: Boolean = true,
-    statsDEnabled: Boolean = false): BatchResult = {
+    observeEarliest: Boolean = true): BatchResult = {
 
-    val spark = df.sparkSession
-    val batch = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val rowType: Column = config.purpose match {
-        case Purpose.SelfDescribingJson => RowTypes.partition(col("value"), col("error"))
-        case _ =>
-          when(col("error").isNotNull, lit(RowTypes.ReadingErrorName))
-            .otherwise(lit(RowTypes.UnpartitionedName))
-      }
-      val typed = batch.withColumn("row_type", rowType)
+    val selfDescribing = config.purpose == Purpose.SelfDescribingJson
 
-      // Batch-wide sequence range — the reference names all of a flush's
-      // objects with the buffer's first/last Kinesis sequence number
-      // (KinesisS3Emitter.scala:72-73). This `.head()` and the
-      // `bad.count()` below are two extra driver actions per micro-batch
-      // over the PERSISTED frame: at micro-batch sizes (bounded by the
-      // buffer limits) they cost two short jobs against cached blocks,
-      // not a recompute — deliberate, not an oversight.
-      val seqRow = batch.agg(
-        min(col("seq")).cast("string").as("first"),
-        max(col("seq")).cast("string").as("last"),
-        count(lit(1)).as("n")).head()
-      val (firstSeq, lastSeq) =
-        (Option(seqRow.getString(0)).getOrElse(batchId.toString),
-         Option(seqRow.getString(1)).getOrElse(batchId.toString))
-      val total = seqRow.getLong(2)
+    // Serializer seam (reference S3Loader.scala:41-44): resolve the
+    // codec for the configured compression; unregistered → hard error
+    // (same failure the reference's startup serializer selection gives).
+    val codec = Serializers.resolve(config.output.s3.compression)
+      .fold(msg => throw new IllegalStateException(msg), identity)
+    val staging = s"${PipelinePaths.stripScheme(config.output.s3.path)}/_staging/batch=$batchId"
 
-      // Batch meta (reference Batch.scala:36-43): earliest collector
-      // tstamp only for Enriched purpose with metrics enabled.
-      val earliest: Option[Instant] = config.purpose match {
-        case Purpose.Enriched if statsDEnabled =>
-          Option(
-            batch.agg(min(Tstamps.collectorTstamp(col("value"))).as("t")).head().getTimestamp(0)
-          ).map(_.toInstant)
-        case _ => None
-      }
+    // Batch meta over the WHOLE flush, good and bad rows: the seq range
+    // the reference names all of a flush's objects with
+    // (KinesisS3Emitter.scala:72-73), the record and bad-row counts, and
+    // for Enriched the earliest collector tstamp (Batch.scala:36-43) —
+    // a TSV split per record, so only when the caller reports it.
+    val metrics = Seq(
+      min(col("seq")).cast("string").as("first"),
+      max(col("seq")).cast("string").as("last"),
+      count(lit(1)).as("count"),
+      count(col("error")).as("bad")) ++
+      (if (config.purpose == Purpose.Enriched && observeEarliest)
+        Seq(min(Tstamps.collectorTstamp(col("value"))).as("earliest"))
+      else Nil)
 
-      // Good rows → gzip text files. ReadingError rows are excluded here
-      // and routed to the dead-letter channel below, like the reference's
-      // emit returning them to fail() (KinesisS3Emitter.scala:83-84,100-105).
-      val good = typed.filter(col("error").isNull && col("row_type") =!= RowTypes.ReadingErrorName)
-      val outRoot = PipelinePaths.stripScheme(config.output.s3.path)
-      val staging = s"$outRoot/_staging/batch=$batchId"
+    // One row type per flush (every purpose but SelfDescribingJson), a
+    // multi-member codec (no per-object index hook) and an output where
+    // the join is a cluster-local copy: no shuffle, one part file per
+    // flush partition, concatenated at commit into the one reference
+    // object. On s3a the join would download and re-upload the flush
+    // through the driver, so a remote output keeps one task per object.
+    val scheme = new Path(staging).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).getScheme
+    val concatenate = exactNaming && !selfDescribing && codec.postCommit.isEmpty &&
+      (scheme == "file" || scheme == "hdfs")
+    val rowType =
+      if (selfDescribing) RowTypes.partition(col("value"), col("error"))
+      else lit(RowTypes.UnpartitionedName)
 
-      // Serializer seam (reference S3Loader.scala:41-44): resolve the
-      // codec for the configured compression; unregistered → hard error
-      // (same failure the reference's startup serializer selection gives).
-      val codec = Serializers.resolve(config.output.s3.compression)
-        .fold(msg => throw new IllegalStateException(msg), identity)
-
-      val toWrite = good.select(col("value"), col("row_type"))
-      val arranged = if (exactNaming) toWrite.repartition(col("row_type")) else toWrite
-
-      // Reference retry semantics (KinesisS3Emitter.scala:116-148): keep
-      // retrying the put with fixed backoff; after `maxTimeout` ms of
-      // continuous failure, give up hard (the reference halts the JVM;
-      // here the exception fails the streaming query, and the checkpoint
-      // makes the batch replayable — same at-least-one-attempt-per-10s
-      // behavior, stricter delivery).
-      val files = retryForAtMost(config.output.s3.maxTimeout, retryBackoffMs) {
-        arranged.write
-          .mode(SaveMode.Overwrite)
-          .partitionBy("row_type")
-          .option("compression", codec.codecValue)
-          .text(staging)
-        commitStaged(spark, config.output.s3, staging, firstSeq, lastSeq, now, codec)
-      }
-
-      // Bad rows → GenericError JSON lines, dead-letter directory.
-      val bad = typed.filter(col("error").isNotNull || col("row_type") === RowTypes.ReadingErrorName)
-        .select(BadRows.asJson(BadRows.genericError(
-          col("value"),
-          coalesce(col("error"), array(lit("Error writing raw event to output stream"))),
-          lit(now.toString).cast("timestamp"))).as("value"))
-      val badCount = bad.count()
-      if (badCount > 0) {
-        bad.write.mode(SaveMode.Append).text(PipelinePaths.stripScheme(config.output.bad.streamName))
-      }
-
-      BatchResult(total, badCount, earliest, files)
-    } finally {
-      batch.unpersist()
+    // Reference retry semantics (KinesisS3Emitter.scala:116-148): keep
+    // retrying the put with fixed backoff; after `maxTimeout` ms of
+    // continuous failure, give up hard (the reference halts the JVM;
+    // here the exception fails the streaming query, and the checkpoint
+    // makes the batch replayable — same at-least-one-attempt-per-10s
+    // behavior, stricter delivery). An Observation reports once, so
+    // each attempt observes its own.
+    val (meta, files) = retryForAtMost(config.output.s3.maxTimeout, retryBackoffMs) {
+      val flush = Observation()
+      // Good rows → text files. Bad rows are excluded here and routed
+      // to the dead-letter channel below, like the reference's emit
+      // returning them to fail() (KinesisS3Emitter.scala:83-84,100-105).
+      val good = df.observe(flush, metrics.head, metrics.tail: _*)
+        .filter(col("error").isNull)
+        .select(col("value"), rowType.as("row_type"))
+      val arranged = if (exactNaming && !concatenate) good.repartition(col("row_type")) else good
+      arranged.write
+        .mode(SaveMode.Overwrite)
+        .partitionBy("row_type")
+        .option("compression", codec.codecValue)
+        .text(staging)
+      val m = flush.get
+      def seq(k: String) = Option(m(k)).fold(batchId.toString)(_.toString)
+      (m, commitStaged(df.sparkSession, config.output.s3, staging, seq("first"), seq("last"), now, codec,
+        concatenate))
     }
+
+    // Bad rows → GenericError JSON lines, dead-letter directory. Only a
+    // flush that observed one pays for this second pass.
+    val badCount = meta("bad").asInstanceOf[Long]
+    if (badCount > 0) {
+      df.filter(col("error").isNotNull)
+        .select(BadRows.asJson(BadRows.genericError(
+          col("value"), col("error"), lit(now.toString).cast("timestamp"))).as("value"))
+        .write.mode(SaveMode.Append).text(PipelinePaths.stripScheme(config.output.bad.streamName))
+    }
+
+    val earliest = meta.get("earliest").collect { case t: java.sql.Timestamp => t.toInstant }
+    BatchResult(meta("count").asInstanceOf[Long], badCount, earliest, files)
   }
 
   /** Move each staged `row_type=X/part-*.txt.gz` file to its final
-    * reference-style name; returns the final paths.
+    * reference-style name; returns the final paths. With `concatenate`,
+    * a row type's part files are first joined, in name order, into one
+    * staged object (a multi-member gzip/bzip2 stream, RFC 1952 §2.2) that
+    * takes the single reference name: a sequential copy through the
+    * driver, done only on a local or HDFS path.
     */
   private def commitStaged(
     spark: org.apache.spark.sql.SparkSession,
@@ -171,7 +177,8 @@ object Emitter {
     firstSeq: String,
     lastSeq: String,
     now: Instant,
-    codec: Serializers.Codec): Seq[String] = {
+    codec: Serializers.Codec,
+    concatenate: Boolean): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val stagingPath = new Path(staging)
     val fs = stagingPath.getFileSystem(conf)
@@ -182,8 +189,9 @@ object Emitter {
     // split (KinesisS3Emitter.scala:208-220,226-244).
     val root = new Path(PipelinePaths.stripScheme(s3.path))
 
-    // Plan the rename fan-out on the driver (pure metadata: names are a
-    // function of listing order + seq range), then EXECUTE the per-file
+    // Plan the rename fan-out on the driver (names are a function of
+    // listing order + seq range; a concatenated object is joined here,
+    // before its one move), then EXECUTE the per-file
     // mkdirs/delete/rename/postCommit on executors when the batch has
     // many part files — at 100× with exactNaming=false this loop is
     // otherwise the per-batch serial section. Small batches stay on the
@@ -195,12 +203,21 @@ object Emitter {
       val partition = if (value == RowTypes.UnpartitionedName) None else Some(value)
       val parts = fs.listStatus(d.getPath)
         .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-        .sortBy(_.getPath.getName)
-      parts.zipWithIndex.map { case (f, i) =>
-        val key = DynamicPath.relativeKey(s3, firstSeq, lastSeq, partition, now)
-        val suffix = if (parts.length > 1) f"-part$i%05d" else ""
-        val decorated = DynamicPath.decorateDirectoryWithTime(s"$key$suffix${codec.extension}", now)
-        (f.getPath.toString, new Path(root, decorated).toString)
+        .map(_.getPath)
+        .sortBy(_.getName)
+      val key = DynamicPath.relativeKey(s3, firstSeq, lastSeq, partition, now)
+      def dest(suffix: String) =
+        new Path(root, DynamicPath.decorateDirectoryWithTime(s"$key$suffix${codec.extension}", now)).toString
+      if (concatenate && parts.length > 1) {
+        val joined = new Path(d.getPath, "object")
+        val out = fs.create(joined, true)
+        try parts.foreach { p =>
+          val in = fs.open(p)
+          try IOUtils.copyBytes(in, out, conf, false) finally in.close()
+        } finally out.close()
+        Seq(joined.toString -> dest(""))
+      } else parts.toSeq.zipWithIndex.map { case (p, i) =>
+        p.toString -> dest(if (parts.length > 1) f"-part$i%05d" else "")
       }
     }
 
@@ -234,6 +251,13 @@ object Emitter {
         if (f.exists(dest)) { hook.foreach(h => h(c, dest)); return }
         throw new java.io.IOException(
           s"staged file $srcS is gone and $destS does not exist — commit state lost")
+      }
+      // A checksummed file system (Hadoop's local one) keeps a hidden
+      // `.<name>.crc` beside each staged file and renames it along;
+      // dropping it first leaves exactly the object under the output.
+      f match {
+        case c: ChecksumFileSystem => c.delete(c.getChecksumFile(src), false)
+        case _                     => ()
       }
       f.mkdirs(dest.getParent)
       if (!f.rename(src, dest)) {

@@ -7,14 +7,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.functions.Tstamps
-
 /** The streaming pipeline: Structured Streaming counterpart of the
   * reference's KCL dataflow (KinesisS3Pipeline.scala:38-51 →
   * KinesisS3Emitter.scala:65-86).
   *
-  *   file/stream source → (value, seq, error) → observe(min tstamp, count)
-  *   → foreachBatch { partitioned gzip emit + bad-row dead-letter }
+  *   file/stream source → (value, seq, error)
+  *   → foreachBatch { observed gzip emit + bad-row dead-letter }
   *
   * Mapping of the reference's pieces:
   *   - KCL worker/shard leases (KinesisSourceExecutor.scala:44-151) →
@@ -23,14 +21,15 @@ import graft.functions.Tstamps
   *   - BasicMemoryBuffer byte/record/time flush limits (Config.scala:172)
   *     → trigger interval (timeLimit) + `maxBytesPerTrigger` admission
   *     (byteLimit; see [[FileSource]] for the full mapping).
-  *   - StatsD per-flush report (KinesisS3Emitter.scala:74-75) →
-  *     `observe("meta", ...)` metrics read from each micro-batch's
-  *     progress and forwarded to StatsD.
+  *   - StatsD per-flush report (KinesisS3Emitter.scala:74-75) → the
+  *     batch meta the Emitter observes on each flush's write, forwarded
+  *     to StatsD.
   *
-  * Scale: the per-batch plan is a narrow projection (no shuffle except
-  * the optional exact-naming coalesce in the Emitter); source
-  * parallelism = input file/shard count; partitioned write parallelism =
-  * partition-value count (exact naming) or task count (scalable naming).
+  * Scale: the per-batch plan is a narrow projection, scanned once by the
+  * write (no shuffle except the exact-naming repartition of
+  * self-describing flushes); source parallelism = input file/shard
+  * count; write parallelism = task count, or partition-value count for
+  * exact-named self-describing flushes (see [[Emitter]]).
   */
 object Pipeline {
 
@@ -71,50 +70,24 @@ object Pipeline {
     now: Option[Instant] = None,
     source: Source = FileSource): Result = {
 
-    val statsDEnabled = config.monitoring.exists(_.statsd.nonEmpty)
-    val resolvedCheckpoint =
-      checkpointDir.getOrElse(PipelinePaths.stripScheme(config.output.s3.path) + "/_checkpoint")
-    val lines = source.lines(spark, config, Some(resolvedCheckpoint))
-
-    val base = records(lines, seqExpr)
-
-    // Batch meta as Spark-native observed metrics (SURVEY §2.1 O9/O10:
-    // min + count via observe, no extra pass over the data).
-    val observed = config.purpose match {
-      case Purpose.Enriched =>
-        base.observe("meta",
-          min(Tstamps.collectorTstamp(col("value"))).as("earliest_tstamp"),
-          count(lit(1)).as("count"))
-      case _ =>
-        base.observe("meta", count(lit(1)).as("count"))
-    }
-
+    val checkpoint = checkpointDir.getOrElse(PipelinePaths.checkpoint(config))
     val results = new ConcurrentLinkedQueue[Emitter.BatchResult]()
 
-    val query = observed.writeStream
+    val query = records(source.lines(spark, config, Some(checkpoint)), seqExpr).writeStream
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", resolvedCheckpoint)
+      .option("checkpointLocation", checkpoint)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val res = Emitter.emitBatch(df, config, batchId,
+        results.add(Emitter.emitBatch(df, config, batchId,
           now = now.getOrElse(Instant.now()),
-          exactNaming = exactNaming,
-          statsDEnabled = statsDEnabled)
-        results.add(res)
+          exactNaming = exactNaming))
         ()
       }
       .start()
     query.awaitTermination()
 
-    val metas = query.recentProgress.toSeq.flatMap { p =>
-      Option(p.observedMetrics.get("meta")).map { row =>
-        val earliest = config.purpose match {
-          case Purpose.Enriched =>
-            Option(row.getAs[java.sql.Timestamp]("earliest_tstamp")).map(_.toInstant)
-          case _ => None
-        }
-        StatsD.Meta(earliest, row.getAs[Long]("count"))
-      }
-    }
+    import scala.jdk.CollectionConverters._
+    val batches = results.asScala.toSeq
+    val metas = batches.map(_.meta)
 
     // Reference reports StatsD after each successful emit
     // (KinesisS3Emitter.scala:74-75); we report per micro-batch.
@@ -124,8 +97,7 @@ object Pipeline {
       meta <- metas
     } StatsD.report(sd, meta)
 
-    import scala.jdk.CollectionConverters._
-    Result(results.asScala.toSeq, metas)
+    Result(batches, metas)
   }
 
   /** Continuous mode: same per-batch plan, ProcessingTime trigger from
@@ -133,7 +105,6 @@ object Pipeline {
     */
   def runContinuous(spark: SparkSession, config: PipelineConfig,
                     source: Source = FileSource): Unit = {
-    val statsDEnabled = config.monitoring.exists(_.statsd.nonEmpty)
     val lifecycle = config.monitoring.flatMap(_.snowplow).map { sp =>
       val lc = new Lifecycle(sp.path, sp.appId)
       lc.start()
@@ -149,20 +120,20 @@ object Pipeline {
     // Per-micro-batch lag/health metrics on the same StatsD channel as
     // the batch-meta report: rows/s, trigger time, watermark lag, state
     // size — the continuous-mode observability surface.
-    val healthListener = config.monitoring.flatMap(_.statsd).map { sd =>
+    val statsD = config.monitoring.flatMap(_.statsd)
+    val healthListener = statsD.map { sd =>
       val l = new StreamingMetrics(sd, StreamingMetrics.udpSink(sd))
       spark.streams.addListener(l)
       l
     }
-    val continuousCheckpoint = PipelinePaths.stripScheme(config.output.s3.path) + "/_checkpoint"
-    val query = records(source.lines(spark, config, Some(continuousCheckpoint)), None).writeStream
+    val checkpoint = PipelinePaths.checkpoint(config)
+    val query = records(source.lines(spark, config, Some(checkpoint)), None).writeStream
       .trigger(Trigger.ProcessingTime(math.max(1000L, config.buffer.timeLimit)))
-      .option("checkpointLocation", continuousCheckpoint)
+      .option("checkpointLocation", checkpoint)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         try {
-          val res = Emitter.emitBatch(df, config, batchId, statsDEnabled = statsDEnabled)
-          for (m <- config.monitoring; sd <- m.statsd)
-            StatsD.report(sd, StatsD.Meta(res.earliestTstamp, res.count))
+          val res = Emitter.emitBatch(df, config, batchId, observeEarliest = statsD.nonEmpty)
+          statsD.foreach(StatsD.report(_, res.meta))
         } catch {
           case scala.util.control.NonFatal(e) =>
             lifecycle.foreach(_.storageWriteFailed(String.valueOf(e.getMessage)))

@@ -11,4 +11,8 @@ package graft.pipeline
 object PipelinePaths {
   def stripScheme(p: String): String =
     if (p.startsWith("s3://")) p.drop("s3://".length) else p
+
+  /** The streaming checkpoint both run modes default to. */
+  def checkpoint(config: PipelineConfig): String =
+    stripScheme(config.output.s3.path) + "/_checkpoint"
 }

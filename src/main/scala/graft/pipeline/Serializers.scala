@@ -22,7 +22,13 @@ object Serializers {
     *                   `CompressionCodec` class name
     * @param extension  final-object extension including the dot (".gz")
     * @param postCommit called once per committed object with
-    *                   (hadoopConf, final path) — e.g. LZO index writing
+    *                   (hadoopConf, final path) — e.g. LZO index writing.
+    *                   A codec WITH a hook gets each object written by
+    *                   one task; one without (gzip, bzip2: multi-member
+    *                   formats) may have a one-row-type flush written
+    *                   from every partition and its parts joined into
+    *                   the object at commit (see [[Emitter]]), since an
+    *                   index such as LZO's covers one stream only.
     */
   final case class Codec(
     codecValue: String,

@@ -282,9 +282,12 @@ object StreamingQueries extends QueryModule {
     * provider commits one delta file per store (q132 13.1s -> 8.6s,
     * q215 5.5s -> 4.0s, q180 4.8s -> 3.8s wall). The crossover is
     * state size vs executor heap: watermark-bounded aggregates /
-    * joins / dedup keep per-partition state far below heap at any
-    * deployment that sizes partitions sanely, so the engine default
-    * for those is the HDFS-backed provider; a deployment whose
+    * joins / dedup keep per-partition state below heap when the
+    * watermark delay is short against the data's time span, so the
+    * engine default for those is the HDFS-backed provider. A long
+    * delay is no bound: q32's 45-day dedup watermark spans the whole
+    * events corpus, so its on-heap state holds every distinct key
+    * (it stays on the default provider for now). A deployment whose
     * per-partition state exceeds heap sets
     * SPARK_GRAFT_STATE_PROVIDER=rocksdb. The state API v2 queries
     * (transformWithState) require RocksDB regardless (Spark 4
@@ -691,7 +694,7 @@ object StreamingQueries extends QueryModule {
         }
 
     val out = drain(s, updated.toDF("user_id", "n_events", "sum_cents", "max_value"),
-      OutputMode.Update(), tws = true)
+      OutputMode.Update())
     // last (= max-count) emission per user is the final state
     out.groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("sum_cents"), col("max_value"))).as("f"))
@@ -2209,7 +2212,7 @@ object StreamingQueries extends QueryModule {
       .transformWithState(new UserStatsProcessor, TimeMode.None(), OutputMode.Update())
 
     val out = drain(s, updated.toDF("user_id", "n_events", "sum_cents", "max_value"),
-      OutputMode.Update())
+      OutputMode.Update(), tws = true)
     out.groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("sum_cents"), col("max_value"))).as("f"))
       .select(col("user_id"), col("f.n_events"), col("f.sum_cents"), col("f.max_value"))

@@ -12,7 +12,7 @@ import graft.SparkSpec
   * bad-row dead-letter. The written files are verified with the external
   * gunzip binary (reference GZipSerializerSpec style).
   */
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec with org.scalatest.LoneElement {
   import org.apache.spark.sql.functions._
 
   private def listFilesRec(dir: File): Seq[File] = {
@@ -67,6 +67,189 @@ class PipelineSpec extends SparkSpec {
         assert(out.split("\n", -1).dropRight(1).sorted.toSeq == lines.sorted)
         // no bad rows
         assert(!new File(s"$work/bad").exists())
+      }
+    }
+  }
+
+  describe("Pipeline.runOnce (one scan per flush)") {
+    it("an enriched flush runs at most 3 jobs and observes its seq range, count and earliest tstamp") {
+      withTempDir { tmp =>
+        val work = tmp.getAbsolutePath
+        Files.createDirectories(new File(s"$work/in").toPath)
+        // three input files, one flush each (the byte limit is below a
+        // file's size); zero-padded seqs make string order numeric order
+        val files = (0 until 3).map { f =>
+          (1 to 40).map { i =>
+            val n = f * 40 + i
+            f"$n%04d\tapp\tweb\t2020-11-26 0${f + 1}:${(n * 7) % 60}%02d:${(n * 13) % 60}%02d\tuser$n"
+          }
+        }
+        files.zipWithIndex.foreach { case (ls, f) =>
+          Files.write(new File(s"$work/in/f$f.txt").toPath, ls.mkString("", "\n", "\n").getBytes("UTF-8"))
+        }
+        val base = config(work, Purpose.Enriched)
+        val cfg = base.copy(buffer = base.buffer.copy(byteLimit = 10))
+
+        // jobs by the micro-batch that ran them (Spark tags each job
+        // started inside a batch with its id); a marker job after the
+        // drain shows every earlier event has reached the listener
+        val jobsPerBatch = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+        val marker = new java.util.concurrent.CountDownLatch(1)
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+            val props = Option(e.properties)
+            props.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+              .foreach(b => jobsPerBatch.merge(b, 1, (a: Integer, c: Integer) => a + c))
+            if (props.exists(_.getProperty("graft.spec.marker") != null)) marker.countDown()
+          }
+        }
+        spark.sparkContext.addSparkListener(listener)
+        val result =
+          try {
+            val r = Pipeline.runOnce(spark, cfg,
+              seqExpr = Some(split(col("value"), "\t").getItem(0)),
+              checkpointDir = Some(s"$work/checkpoint"),
+              now = Some(Instant.parse("2021-04-30T12:00:00Z")))
+            spark.sparkContext.setLocalProperty("graft.spec.marker", "1")
+            try spark.range(1).count() finally spark.sparkContext.setLocalProperty("graft.spec.marker", null)
+            assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+            r
+          } finally spark.sparkContext.removeSparkListener(listener)
+
+        import scala.jdk.CollectionConverters._
+        assert(result.batches.size == 3)
+        assert(jobsPerBatch.size == 3)
+        assert(jobsPerBatch.values.asScala.forall(_ <= 3), s"jobs per flush: $jobsPerBatch")
+
+        val Named = ".*-(\\d{4})-(\\d{4})\\.gz".r
+        val got = result.batches.map { b =>
+          val Named(first, last) = new File(b.files.loneElement).getName
+          (first, last, b.count, b.badCount, b.earliestTstamp)
+        }.sortBy(_._1)
+        val want = files.map { ls =>
+          val seqs = ls.map(_.split("\t")(0))
+          val earliest = ls.map(_.split("\t")(3)).min.replace(' ', 'T') + "Z"
+          (seqs.min, seqs.max, ls.size.toLong, 0L, Some(Instant.parse(earliest)))
+        }
+        assert(got == want)
+        assert(result.observedMeta.map(_.count) == result.batches.map(_.count))
+        // good rows only: the dead-letter channel is never written
+        assert(!new File(s"$work/bad").exists())
+      }
+    }
+
+    it("a multi-partition flush commits one object per row type, readable by gunzip and Spark") {
+      withTempDir { tmp =>
+        val work = tmp.getAbsolutePath
+        import spark.implicits._
+        val lines = (1 to 400).map(i => s"$i\tapp\tweb\t2020-11-26 00:01:05\tu$i")
+        val df = lines.toDF("value").repartition(4)
+          .withColumn("seq", split(col("value"), "\t").getItem(0))
+          .withColumn("error", lit(null).cast("array<string>"))
+        assert(df.rdd.getNumPartitions == 4)
+        val now = Instant.parse("2021-04-30T12:00:00Z")
+
+        for (compression <- Seq(Compression.Gzip, Compression.Bzip2)) {
+          val base = config(s"$work/$compression", Purpose.Raw, dateFormat = None)
+          val cfg = base.copy(output = base.output.copy(s3 = base.output.s3.copy(compression = compression)))
+          val result = Emitter.emitBatch(df, cfg, batchId = 0, now = now)
+          assert(result.count == 400 && result.badCount == 0)
+          val ext = if (compression == Compression.Gzip) ".gz" else ".bz2"
+          val obj = new File(result.files.loneElement)
+          assert(obj.getName == s"pre-2021-04-30-120000-1-99$ext")
+          // the output directory lists exactly the object: no staging
+          // left, no hidden checksum beside it
+          assert(listFilesRec(new File(s"$work/$compression/out")) == Seq(obj))
+          val read = spark.read.text(obj.getAbsolutePath).as[String].collect().toSeq
+          assert(read.sorted == lines.sorted)
+          if (compression == Compression.Gzip) {
+            val out = s"gunzip -c ${obj.getAbsolutePath}".!!
+            assert(out.split("\n", -1).dropRight(1).sorted.toSeq == lines.sorted)
+            // joined from the flush's partitions: the first member holds
+            // only part of it
+            assert(PipelineSpec.firstGzipMember(obj).size < lines.size)
+          }
+          assert(!new File(s"$work/$compression/bad").exists())
+        }
+      }
+    }
+
+    it("a concatenated bzip2 object re-reads whole when its splits cross stream boundaries") {
+      withTempDir { tmp =>
+        val work = tmp.getAbsolutePath
+        import spark.implicits._
+        val lines = (1 to 4000).map(i => s"$i\tapp\tweb\t2020-11-26 00:01:05\tu${i * 7919 % 10007}")
+        val df = lines.toDF("value").repartition(4)
+          .withColumn("seq", split(col("value"), "\t").getItem(0))
+          .withColumn("error", lit(null).cast("array<string>"))
+        val base = config(work, Purpose.Raw, dateFormat = None)
+        val cfg = base.copy(output = base.output.copy(s3 = base.output.s3.copy(compression = Compression.Bzip2)))
+        val obj = new File(Emitter.emitBatch(df, cfg, batchId = 0,
+          now = Instant.parse("2021-04-30T12:00:00Z")).files.loneElement)
+        // one bzip2 stream per flush partition: "BZh<level>" + block magic
+        val bytes = Files.readAllBytes(obj.toPath)
+        val streamStarts = bytes.indices.count { i =>
+          i + 10 <= bytes.length && bytes(i) == 'B' && bytes(i + 1) == 'Z' && bytes(i + 2) == 'h' &&
+            bytes.slice(i + 4, i + 10).sameElements(Array(0x31, 0x41, 0x59, 0x26, 0x53, 0x59).map(_.toByte))
+        }
+        assert(streamStarts == 4)
+        val maxSplit = 300
+        assert(bytes.length > 4 * maxSplit)
+        val key = "spark.sql.files.maxPartitionBytes"
+        val prior = spark.conf.getOption(key)
+        spark.conf.set(key, maxSplit.toString)
+        try {
+          val read = spark.read.text(obj.getAbsolutePath)
+          assert(read.rdd.getNumPartitions >= bytes.length / maxSplit)
+          assert(read.as[String].collect().toSeq.sorted == lines.sorted)
+        } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      }
+    }
+
+    it("a flush to a remote store is written by one task per object, not joined at commit") {
+      withTempDir { tmp =>
+        val work = tmp.getAbsolutePath
+        import spark.implicits._
+        val lines = (1 to 400).map(i => s"$i\tapp\tweb\t2020-11-26 00:01:05\tu$i")
+        val df = lines.toDF("value").repartition(4)
+          .withColumn("seq", split(col("value"), "\t").getItem(0))
+          .withColumn("error", lit(null).cast("array<string>"))
+        spark.sparkContext.hadoopConfiguration.set("fs.remotelike.impl", classOf[RemoteLikeFileSystem].getName)
+        val base = config(work, Purpose.Raw, dateFormat = None)
+        val cfg = base.copy(output = base.output.copy(s3 = base.output.s3.copy(path = s"remotelike://$work/out")))
+        val result = Emitter.emitBatch(df, cfg, batchId = 0, now = Instant.parse("2021-04-30T12:00:00Z"))
+        val obj = new java.net.URI(result.files.loneElement)
+        assert(obj.getScheme == "remotelike")
+        assert(new File(obj.getPath).getName == "pre-2021-04-30-120000-1-99.gz")
+        // a single gzip member holds the whole flush
+        assert(PipelineSpec.firstGzipMember(new File(obj.getPath)).sorted == lines.sorted)
+      }
+    }
+
+    it("an enriched flush skips the earliest tstamp when the caller does not report it") {
+      withTempDir { tmp =>
+        val work = tmp.getAbsolutePath
+        import spark.implicits._
+        val df = Seq("1\tapp\tweb\t2020-11-26 00:01:05\tu1").toDF("value")
+          .withColumn("seq", lit("1"))
+          .withColumn("error", lit(null).cast("array<string>"))
+        val result = Emitter.emitBatch(df, config(work, Purpose.Enriched), batchId = 0,
+          now = Instant.parse("2021-04-30T12:00:00Z"), observeEarliest = false)
+        assert(result.count == 1 && result.earliestTstamp.isEmpty && result.files.size == 1)
+      }
+    }
+
+    it("an empty flush commits nothing and reports zero records") {
+      withTempDir { tmp =>
+        val work = tmp.getAbsolutePath
+        import spark.implicits._
+        val df = Seq.empty[String].toDF("value")
+          .withColumn("seq", lit(null).cast("string"))
+          .withColumn("error", lit(null).cast("array<string>"))
+        val result = Emitter.emitBatch(df, config(work, Purpose.Enriched), batchId = 7,
+          now = Instant.parse("2021-04-30T12:00:00Z"))
+        assert(result == Emitter.BatchResult(0L, 0L, None, Nil))
+        assert(listFilesRec(new File(s"$work/out")).isEmpty)
       }
     }
   }
@@ -365,4 +548,23 @@ class PipelineSpec extends SparkSpec {
       }
     }
   }
+}
+
+object PipelineSpec {
+
+  /** The lines of a gzip file's first member only: the whole content
+    * exactly when one task wrote the object. */
+  def firstGzipMember(f: File): Seq[String] = {
+    val in = new org.apache.commons.compress.compressors.gzip.GzipCompressorInputStream(
+      new java.io.BufferedInputStream(new java.io.FileInputStream(f)), false)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq.toList
+    finally in.close()
+  }
+}
+
+/** The local file system under a scheme of its own, standing in for a
+  * remote object store in specs. */
+class RemoteLikeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("remotelike:///")
+  override def getScheme: String = "remotelike"
 }

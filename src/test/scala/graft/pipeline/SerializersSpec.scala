@@ -71,5 +71,33 @@ class SerializersSpec extends SparkSpec {
         }
       }
     }
+
+    it("a codec with a post-commit hook writes each object from one task, not joined from parts") {
+      withTempDir { tmp =>
+        val work = tmp.getAbsolutePath
+        import spark.implicits._
+        val lines = (1 to 200).map(i => s"line-$i")
+        val df = lines.toDF("value").repartition(4)
+          .withColumn("seq", lit("0"))
+          .withColumn("error", lit(null).cast("array<string>"))
+        // a gzip-backed stand-in whose hook indexes the object, as an
+        // indexed-LZO plug-in's would (its index covers one stream)
+        val hooked = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        Serializers.register(Compression.Lzo, Serializers.Codec(
+          codecValue = "org.apache.hadoop.io.compress.GzipCodec", extension = ".lzo.test",
+          postCommit = Some((_, path) => { hooked.add(path.toUri.getPath); () })))
+        try {
+          val result = Emitter.emitBatch(df, config(work), batchId = 0,
+            now = Instant.parse("2021-04-30T12:00:00Z"))
+          assert(result.count == 200)
+          // more than one staged part would commit as `-partNNNNN` objects
+          assert(result.files.map(new File(_).getName) == Seq("pre-2021-04-30-120000-0-0.lzo.test"))
+          import scala.jdk.CollectionConverters._
+          assert(hooked.asScala.toSeq == result.files.map(new File(_).getAbsolutePath))
+          // one gzip member holds every line: one task wrote the object
+          assert(PipelineSpec.firstGzipMember(new File(result.files.head)).sorted == lines.sorted)
+        } finally Serializers.unregister(Compression.Lzo)
+      }
+    }
   }
 }
