@@ -37,6 +37,8 @@ object Staging {
       record(src, stage)
     }
 
+  /** Recursive delete with the walk stream CLOSED (an unclosed
+    * Files.walk leaks a directory handle per call). */
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val walk = Files.walk(p)

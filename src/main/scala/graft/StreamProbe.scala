@@ -27,7 +27,8 @@ object StreamProbe {
         "q223_rate_limiter,q204_mapstate_counts").split(',').map(_.trim).filter(_.nonEmpty)
     val spark = Sessions.local("graft-stream-probe")
     // A/B harness: SPARK_GRAFT_PROBE_CONF="k=v;k=v" applies session confs
-    // before any query runs (e.g. a different state-store provider).
+    // before any query runs. It cannot switch the state-store provider:
+    // the drains set it per query — use SPARK_GRAFT_STATE_PROVIDER.
     sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(';').filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
 
@@ -74,7 +75,7 @@ object StreamProbe {
       val allRemovals = ps.flatMap(_.stateOperators.toSeq).map(_.allRemovalsTimeMs).sum
       val commitTime = ps.flatMap(_.stateOperators.toSeq).map(_.commitTimeMs).sum
       val rows = ps.map(_.numInputRows).sum
-      val json = s"""{"query": "$name", "pass": $pass, "sec": ${f"$sec%.3f"}, "batches": ${ps.size}, """ +
+      val json = s"""{"query": "$name", "pass": $pass, "sec": ${"%.3f".formatLocal(java.util.Locale.ROOT, sec)}, "batches": ${ps.size}, """ +
         s""""jobs": ${jobCount.get}, "input_rows": $rows, """ +
         sums.map { case (k, v) => s""""$k": $v""" }.mkString(", ") +
         s""", "stateUpdatesMs": $stateCommit, "stateRemovalsMs": $allRemovals, "stateCommitMs": $commitTime, "custom": $customJson}"""

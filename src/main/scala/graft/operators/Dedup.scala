@@ -16,6 +16,19 @@ import graft.functions.TextFns
   *  - MinHash + banded LSH: fixed-size signatures via 2×16 min-aggregates
   *    (single shuffle, no per-seed row explosion), band-bucket join for
   *    candidates, exact-Jaccard verification only within candidates.
+  *
+  * The crawl-incremental index family rests on two private cores:
+  *  - [[maintainStore]]: one store step per crawl — diff, recompute
+  *    only the added/changed ids, carry unchanged rows as `retained`,
+  *    union. Every `incremental…` store (signatures, SimHash,
+  *    containment index, and in sibling objects phash, IVF assignments,
+  *    postings) is a binding of it;
+  *  - [[bandedPairs]] / [[maintainedPairs]]: one banded-pair chain —
+  *    full pairs, the touched-bucket fresh leg, the both-retained
+  *    survivor leg, the cap-crossing detector and the checked
+  *    re-expansion — parameterized by a [[Banding]] (MinHash bands with
+  *    identity verify, or Manku bands with the stored-fingerprint
+  *    hamming verify).
   */
 object Dedup {
 
@@ -207,14 +220,11 @@ object Dedup {
     * the NEW document snapshot, [[SnapshotDiff.diffStored]] classifies
     * every id by text-level [[TextFns.hash60]] — the old texts are
     * never re-read, only the ~24 B/row (id, fp) slice of the store —
-    * and ONLY `added`/`changed` texts go through the shingle + MinHash
-    * pass; `unchanged` ids keep their stored slots, `removed` ids drop.
-    * The shingling delta is surfaced as an `observe` metric
-    * (`incr_sig_texts`) so a pipeline can alert when compute volume
-    * stops tracking the crawl delta. Returns the NEXT store: same
-    * schema, `src` marking `computed` vs `retained` provenance, so
-    * signature maintenance costs O(delta) shingling per crawl, never
-    * O(corpus) — and the maintained store keeps feeding
+    * and [[maintainStore]] sends ONLY `added`/`changed` texts through
+    * the shingle + MinHash pass (observed as `incr_sig_texts`);
+    * `unchanged` ids keep their stored slots, `removed` ids drop.
+    * Returns the NEXT store: same schema, `src` marking `computed` vs
+    * `retained` provenance — and the maintained store keeps feeding
     * [[lshCandidates]] / [[minhashNearDups]]' banding unchanged.
     */
   def incrementalSignatures(newDocs: DataFrame, prevStore: DataFrame,
@@ -237,130 +247,87 @@ object Dedup {
     */
   def incrementalSignaturesFrom(d: DataFrame, newDocs: DataFrame,
                                 prevStore: DataFrame, id: Column, text: Column,
-                                numPerms: Int, w: Int = 3): DataFrame = {
-    // The change set is reused twice (compute input + content_fp carry);
+                                numPerms: Int, w: Int = 3): DataFrame =
+    maintainStore(d, newDocs.select(id.as("doc_id"), text.as("text")), prevStore,
+        Seq("doc_id", "content_fp") ++ (0 until numPerms).map(i => s"sig$i"),
+        "incr_sig_texts", "n_texts") { (toCompute, _) =>
+      minhashSignatures(toCompute, col("doc_id"), col("text"), numPerms, w)
+    }
+
+  /** The store-maintenance core behind every crawl-incremental store:
+    * given a [[SnapshotDiff.diffStored]] diff `d`, ONLY the
+    * `added`/`changed` ids go through `compute` (their count surfaced
+    * as the `metric` observation, field `counter`, so a pipeline can
+    * alert when compute volume stops tracking the crawl delta);
+    * `unchanged` ids keep their stored rows verbatim, tagged
+    * `retained`; `removed` ids drop. Returns the NEXT store — same
+    * columns, fresh rows tagged `computedTag` — so maintenance costs
+    * O(delta) compute per crawl, never O(corpus).
+    *
+    * @param payload   the new snapshot projected to the key plus what
+    *                  `compute` reads
+    * @param cols      the store's columns before `src`: key first,
+    *                  content fingerprint second
+    * @param compute   (rows to recompute, retained rows) ⇒ fresh store
+    *                  rows; the first argument is `payload` joined with
+    *                  each id's new fingerprint (under `cols(1)`), and
+    *                  an output without that column gets it from the diff
+    * @param shareRetained materialize the retained rows once, for a
+    *                  `compute` that reads them as well
+    */
+  private[operators] def maintainStore(d: DataFrame, payload: DataFrame,
+                                       prevStore: DataFrame, cols: Seq[String],
+                                       metric: String, counter: String,
+                                       computedTag: String = "computed",
+                                       shareRetained: Boolean = false)(
+      compute: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val (key, fp) = (cols.head, cols(1))
+    val storeCols = cols.map(col)
+    // The change set feeds the compute input and the fingerprint carry;
     // the lazy checkpoint keeps the diff join from re-running — it is
-    // O(delta) rows of (id, fp), never texts.
+    // O(delta) rows of (id, fp), never payloads.
     val changes = d.filter(col("status").isin("added", "changed"))
-      .select(col("id").as("doc_id"), col("new_fp"))
+      .select(col("id").as(key), col("new_fp").as(fp))
       .localCheckpoint(false)
-    val toCompute = newDocs.select(id.as("doc_id"), text.as("text")).join(changes, "doc_id")
-    val sigCols = (0 until numPerms).map(i => col(s"sig$i"))
-    val fresh = minhashSignatures(
-        toCompute.observe("incr_sig_texts", count(lit(1)).as("n_texts")),
-        col("doc_id"), col("text"), numPerms, w)
-      .join(changes.select(col("doc_id"), col("new_fp").as("content_fp")), "doc_id")
-      .select(col("doc_id") +: col("content_fp") +: sigCols :+
-        lit("computed").as("src"): _*)
-    val retained = prevStore
-      .join(d.filter(col("status") === "unchanged").select(col("id").as("doc_id")),
-        "doc_id")
-      .select(col("doc_id") +: col("content_fp") +: sigCols :+
-        lit("retained").as("src"): _*)
-    fresh.unionByName(retained)
+    val kept = prevStore
+      .join(d.filter(col("status") === "unchanged").select(col("id").as(key)), key)
+      .select(storeCols :+ lit("retained").as("src"): _*)
+    val retained = if (shareRetained) kept.localCheckpoint(false) else kept
+    val out = compute(
+      payload.join(changes, key).observe(metric, count(lit(1)).as(counter)), retained)
+    (if (out.columns.contains(fp)) out else out.join(changes, key))
+      .select(storeCols :+ lit(computedTag).as("src"): _*)
+      .unionByName(retained)
   }
 
   /** Delta-scoped banded-LSH PAIR maintenance — the third leg of the
     * incremental dedup index next to [[incrementalSignatures]]: given
-    * the MAINTAINED signature store (its `src` marks `computed` vs
-    * `retained` provenance) and the PREVIOUS crawl's candidate-pair
-    * set, produce crawl N+1's pair set without re-expanding untouched
-    * buckets. Two disjoint legs:
-    *  - survivors: prev pairs whose BOTH endpoints are `retained` —
-    *    their signature slots are unchanged, so they share exactly the
-    *    bands they shared last crawl (pairs with a removed or changed
-    *    endpoint drop out here by construction);
-    *  - new pairs: banding over the store, but buckets with NO
-    *    `computed` member are discarded BEFORE pair expansion (the
-    *    `max(touched)` filter — at a 1% crawl delta that kills ~99% of
-    *    the quadratic bucket work), and expanded pairs keep only those
-    *    with ≥1 `computed` endpoint (a retained–retained pair inside a
-    *    touched bucket is already a survivor).
-    * The union equals `lshCandidates(store)` — a retained–retained
-    * pair shares a band now iff it did last crawl (slots unchanged) and
-    * was hence in `prevPairs`; every other pair has a computed endpoint
-    * and its bucket survives the touched filter. CAVEAT: the
-    * equivalence holds only while no bucket CROSSES `maxBucket`
-    * between crawls. A bucket that exceeded the cap last crawl (its
-    * pairs dropped from `prevPairs`) and shrank below it via removals
-    * while gaining no computed member is discarded by the touched
-    * filter here, so its retained–retained pairs appear in a full
-    * recompute but not in the maintained set. [[cappedBucketCrossings]]
-    * DETECTS exactly this case from the two stores (nothing extra to
-    * persist), and [[incrementalLshPairsChecked]] wires the detector +
-    * auto re-expansion INTO the maintenance step — production chains
-    * (q262/q265/q287) use the checked variant, making the ≡-full pin
-    * unconditional. Output carries an `origin` column
-    * (`survivor`/`new`) so downstream Jaccard verification can also
-    * run delta-only.
+    * the MAINTAINED signature store (`src` provenance) and the PREVIOUS
+    * crawl's candidate-pair set, produce crawl N+1's pair set without
+    * re-expanding untouched buckets — [[maintainedPairs]] over MinHash
+    * bands. Output carries an `origin` column (`survivor`/`new`) so
+    * downstream Jaccard verification can also run delta-only. Under a
+    * finite `maxBucket` see [[maintainedPairs]] for the cap-crossing
+    * caveat; production chains (q262/q265/q287) use
+    * [[incrementalLshPairsChecked]].
     */
   def incrementalLshPairs(store: DataFrame, prevPairs: DataFrame,
                           numPerms: Int, rowsPerBand: Int,
-                          maxBucket: Int = 100000): DataFrame = {
-    val bands = bandCols(numPerms, rowsPerBand)
-    val exploded = store
-      .select(col("doc_id"), (col("src") === "computed").cast("long").as("n"),
-        explode(bands).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"), col("n"))
-    val fresh = pairsFromBuckets(
-      exploded.groupBy(col("band"), col("key"))
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ds"),
-          max(col("n")).as("touched"))
-        .filter(col("touched") === 1L)
-        .drop("touched"),
-      maxBucket)
-      .filter(col("na") === 1L || col("nb") === 1L)
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-    val retained = store.filter(col("src") === "retained")
-    val survivors = prevPairs.select(col("doc_a"), col("doc_b"))
-      .join(retained.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
-      .join(retained.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
-    survivors.withColumn("origin", lit("survivor"))
-      .unionByName(fresh.withColumn("origin", lit("new")))
-  }
+                          maxBucket: Int = 100000): DataFrame =
+    maintainedPairs(store, prevPairs, minhashBanding(numPerms, rowsPerBand), maxBucket)
 
-  /** Detect the ONE case where [[incrementalLshPairs]]' maintained set
-    * can silently diverge from a full `lshCandidates` recompute (the
-    * docstring caveat, made checkable): a bucket that exceeded
-    * `maxBucket` last crawl (its pairs were cap-dropped from
-    * `prevPairs`) and shrank to ≤ cap — its retained–retained pairs
-    * are in a full recompute but in neither the survivor leg (absent
-    * from `prevPairs`) nor the fresh leg. The fresh leg only emits
-    * pairs with ≥1 COMPUTED endpoint, so a crossing bucket must be
-    * flagged EVEN IF it gained a computed member: its retained pairs
-    * are still unseen (an earlier revision filtered crossings on
-    * `touched = 0` and silently lost exactly those pairs — e.g. a
-    * cap-3 bucket {1,2,3,4} that drops 3,4 and gains computed doc 9
-    * leaves pair (1,2) in no leg). Both crawls' bucket sizes are
-    * RE-DERIVED from the two stores' signature slots (nothing extra to
-    * persist; banding is a narrow projection + one count per store).
-    * Run it after each maintenance step: empty → the incremental ≡
-    * full invariant provably held this crawl; non-empty → re-expand
-    * exactly these buckets (their doc lists are in the returned rows'
-    * band/key) or schedule a full rebuild.
+  /** The cap-crossing buckets of a MinHash maintenance step — see
+    * [[bucketCrossings]] for the predicate.
     *
     * @return (band, key, prev_size, next_size) — the crossing buckets
     */
   def cappedBucketCrossings(prevStore: DataFrame, store: DataFrame,
                             numPerms: Int, rowsPerBand: Int,
-                            maxBucket: Int): DataFrame = {
-    def bands = bandCols(numPerms, rowsPerBand)
-    def sized(st: DataFrame, n: String) = st
-      .select(col("doc_id"), explode(bands).as("b"))
-      .groupBy(col("b.band").as("band"), col("b.key").as("key"))
-      .agg(count(lit(1)).as(n))
-    sized(prevStore, "prev_size")
-      .filter(col("prev_size") > maxBucket)
-      .join(sized(store, "next_size"), Seq("band", "key"))
-      .filter(col("next_size") <= maxBucket)
-      .select(col("band"), col("key"), col("prev_size"), col("next_size"))
-  }
+                            maxBucket: Int): DataFrame =
+    bucketCrossings(prevStore, store, bandCols(numPerms, rowsPerBand), maxBucket)
 
   /** One banded (band, key) struct per band over a signature store's
-    * `sig0..sigN` slots — the shared bucketing projection of
-    * [[incrementalLshPairs]], [[cappedBucketCrossings]] and
-    * [[incrementalLshPairsChecked]]. */
+    * `sig0..sigN` slots — the MinHash family's bucketing projection. */
   private def bandCols(numPerms: Int, rowsPerBand: Int): Column = {
     val numBands = numPerms / rowsPerBand
     array((0 until numBands).map { bnd =>
@@ -371,63 +338,155 @@ object Dedup {
   }
 
   /** [[incrementalLshPairs]] with the cap-crossing caveat CLOSED
-    * in-chain rather than left to an out-of-band check:
-    * [[cappedBucketCrossings]] runs against the previous store as part
-    * of the maintenance step, and exactly the flagged buckets are
-    * RE-EXPANDED from the maintained store, so the maintained set is
-    * COMPLETE vs a full `lshCandidates(store)` recompute — every full
-    * pair is present, including the shrank-under-cap case whether or
-    * not the bucket also gained a computed member (retained–retained
-    * pairs of a crossing bucket are invisible to the fresh leg either
-    * way). PRECISE INVARIANT: maintained ⊇ full, with equality unless
-    * some bucket crossed UP over the cap this crawl — an up-crossed
-    * bucket's previously-emitted pairs SURVIVE here while a full
-    * recompute cap-drops them. That surplus is kept DELIBERATELY:
-    * retained docs keep their signatures, so surviving pairs are still
-    * true candidates — dropping verified pairs to mimic the full
-    * recompute's cap-cost artifact would trade recall for nothing
-    * (spec-pinned in DedupSpec's up-crossing case). Re-expanded pairs
-    * carry origin `new`: they were cap-dropped from `prevPairs`, so
-    * downstream verification ([[incrementalMinhashNearDups]]) must
-    * verify them fresh and [[incrementalComponents]] must contract
-    * them — exactly the `new` semantics. Crossings are rare by
-    * construction (a >cap bucket must shrink under cap between
-    * crawls), so the extra leg is empty in the steady state
-    * and the detector's two banded counts are the only added cost —
-    * no pair expansion, no signature recompute.
+    * in-chain (the checked mode of [[maintainedPairs]]; invariant
+    * there). Re-expanded pairs carry origin `new`: they were
+    * cap-dropped from `prevPairs`, so downstream verification
+    * ([[incrementalMinhashNearDups]]) verifies them fresh and
+    * [[incrementalComponents]] contracts them — exactly the `new`
+    * semantics.
     */
   def incrementalLshPairsChecked(prevStore: DataFrame, store: DataFrame,
                                  prevPairs: DataFrame, numPerms: Int,
                                  rowsPerBand: Int,
-                                 maxBucket: Int = 100000): DataFrame = {
-    val base = incrementalLshPairs(store, prevPairs, numPerms, rowsPerBand,
-        maxBucket)
-      .localCheckpoint(false) // output union AND the dedup anti-join below
-    val flagged = cappedBucketCrossings(prevStore, store, numPerms,
-      rowsPerBand, maxBucket).select(col("band"), col("key"))
-    // Flagged buckets' CURRENT membership (retained docs plus any
-    // computed members they gained): band the store once, keep only
-    // flagged keys (a tiny set; AQE broadcasts the join), expand their
-    // pairs; pairs already emitted by the fresh leg (computed endpoint)
-    // fall out in the anti-join below.
-    val exploded = store
-      .select(col("doc_id"), lit(0L).as("n"),
-        explode(bandCols(numPerms, rowsPerBand)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"),
-        col("n"))
-      .join(flagged, Seq("band", "key"))
-    val reexpanded = pairsFromBuckets(
-      exploded.groupBy(col("band"), col("key"))
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ds")),
-      maxBucket)
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-      // a re-expanded pair may already be present via another bucket
-      // (survivor from prevPairs, or new via a touched bucket) — the
-      // legs stay disjoint
-      .join(base.select(col("doc_a"), col("doc_b")),
-        Seq("doc_a", "doc_b"), "left_anti")
-    base.unionByName(reexpanded.withColumn("origin", lit("new")))
+                                 maxBucket: Int = 100000): DataFrame =
+    maintainedPairs(store, prevPairs, minhashBanding(numPerms, rowsPerBand),
+      maxBucket, Some(prevStore))
+
+  /** One banded index family of the pair core: `cols` are the store
+    * columns its `bands` read, `pairCols` its pair schema, and `verify`
+    * turns candidate (doc_a, doc_b) pairs into `pairCols` rows against
+    * the banded slice — the identity for MinHash candidates, the
+    * stored-fingerprint `bit_count(xor)` check for the Manku family. */
+  private final case class Banding(cols: Seq[String], bands: Column,
+                                    pairCols: Seq[String],
+                                    verify: (DataFrame, DataFrame) => DataFrame)
+
+  private def minhashBanding(numPerms: Int, rowsPerBand: Int): Banding =
+    Banding((0 until numPerms).map(i => s"sig$i"), bandCols(numPerms, rowsPerBand),
+      Seq("doc_a", "doc_b"), (cands, _) => cands)
+
+  /** The slice every leg of the pair core reads: (doc_id, n, the
+    * family's columns), `n` = 1 for a computed row and 0 otherwise,
+    * materialized EAGERLY once — bucketing, verification, survivors,
+    * the crossing detector and the re-expansion all consume it, and
+    * consumer stages of one action must not race a lazy checkpoint
+    * (q290's lesson). */
+  private def bandSlice(store: DataFrame, b: Banding, computed: Column): DataFrame =
+    store.select(col("doc_id") +: computed.cast("long").as("n") +: b.cols.map(col): _*)
+      .localCheckpoint(true)
+
+  /** Candidate (doc_a, doc_b) pairs sharing a (band, key) bucket of the
+    * slice. `fresh`: buckets with NO computed member are discarded
+    * BEFORE pair expansion (at a 1% crawl delta that kills ~99% of the
+    * quadratic bucket work) and only pairs with ≥1 computed endpoint
+    * are kept. `only`: expand just these (band, key) buckets. */
+  private def bucketPairs(slice: DataFrame, bands: Column, maxBucket: Int,
+                          fresh: Boolean = false,
+                          only: Option[DataFrame] = None): DataFrame = {
+    val exploded = slice.select(col("doc_id"), col("n"), explode(bands).as("b"))
+      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"), col("n"))
+    val grouped = only.fold(exploded)(exploded.join(_, Seq("band", "key")))
+      .groupBy(col("band"), col("key"))
+    val members = sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ds")
+    val pairs =
+      if (!fresh) pairsFromBuckets(grouped.agg(members), maxBucket)
+      else pairsFromBuckets(
+          grouped.agg(members, max(col("n")).as("touched"))
+            .filter(col("touched") === 1L).drop("touched"),
+          maxBucket)
+        .filter(col("na") === 1L || col("nb") === 1L)
+    pairs.select(col("doc_a"), col("doc_b")).distinct()
+  }
+
+  /** Rows of `pairs` whose endpoints are BOTH in `ids` (doc_id), in
+    * `pairs`' column order (a USING join puts its key first). */
+  private def bothIn(pairs: DataFrame, ids: DataFrame): DataFrame =
+    pairs.join(ids.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
+      .join(ids.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
+      .select(pairs.columns.map(col): _*)
+
+  /** The full banded pair set of a store: bucket, expand, verify. */
+  private def bandedPairs(store: DataFrame, b: Banding, maxBucket: Int): DataFrame = {
+    val slice = bandSlice(store, b, lit(0L))
+    b.verify(bucketPairs(slice, b.bands, maxBucket), slice)
+  }
+
+  /** The banded-pair maintenance core: crawl N+1's pair set from the
+    * MAINTAINED store (`src` provenance) and crawl N's pairs, without
+    * re-expanding untouched buckets. Two disjoint legs, tagged
+    * `origin`:
+    *  - survivors: prev pairs whose BOTH endpoints are `retained` —
+    *    their band inputs are unchanged, so they share exactly the
+    *    buckets (and verify exactly as) last crawl; pairs with a removed
+    *    or changed endpoint drop out by construction;
+    *  - new: [[bucketPairs]]' fresh leg, verified.
+    * The union equals [[bandedPairs]] over the store — a
+    * retained–retained pair shares a bucket now iff it did last crawl
+    * and was hence in `prevPairs`; every other pair has a computed
+    * endpoint and its bucket survives the touched filter — as long as
+    * no bucket CROSSES `maxBucket` between crawls (vacuous at the
+    * no-drop cap).
+    *
+    * THE CAP-CROSSING INVARIANT. A bucket that exceeded the cap last
+    * crawl (its pairs cap-dropped from `prevPairs`) and shrank to ≤ cap
+    * holds retained–retained pairs that are in a full recompute but in
+    * NEITHER leg — and that stays true even when the bucket also gained
+    * a computed member (the fresh leg only emits pairs with a computed
+    * endpoint; an earlier revision that flagged only `touched = 0`
+    * crossings lost exactly those pairs). Given `prevStore`, the
+    * CHECKED mode closes it in-chain: [[bucketCrossings]] flags those
+    * buckets from the two stores, exactly those are re-expanded from
+    * the maintained slice and verified, and pairs already present via
+    * another bucket fall out in an anti-join (origin `new`). Then
+    * maintained ⊇ full, with equality unless some bucket crossed UP
+    * over the cap this crawl: an up-crossed bucket's surviving pairs
+    * are KEPT while a full recompute cap-drops them — deliberately,
+    * since their inputs are unchanged and they remain true pairs
+    * (DedupSpec's up-crossing case pins both families). Crossings are
+    * rare by construction, so the extra leg is empty in the steady
+    * state and the detector's two banded counts are its only cost.
+    */
+  private def maintainedPairs(store: DataFrame, prevPairs: DataFrame, b: Banding,
+                              maxBucket: Int,
+                              prevStore: Option[DataFrame] = None): DataFrame = {
+    val slice = bandSlice(store, b, col("src") === "computed")
+    val base = bothIn(prevPairs.select(b.pairCols.map(col): _*), slice.filter(col("n") === 0L))
+      .withColumn("origin", lit("survivor"))
+      .unionByName(b.verify(bucketPairs(slice, b.bands, maxBucket, fresh = true), slice)
+        .withColumn("origin", lit("new")))
+    prevStore.fold(base) { prev =>
+      val kept = base.localCheckpoint(true) // eager: the output union AND the anti-join
+      val flagged = bucketCrossings(prev, slice, b.bands, maxBucket)
+        .select(col("band"), col("key"))
+      kept.unionByName(
+        b.verify(bucketPairs(slice, b.bands, maxBucket, only = Some(flagged)), slice)
+          .join(kept.select(col("doc_a"), col("doc_b")), Seq("doc_a", "doc_b"), "left_anti")
+          .withColumn("origin", lit("new")))
+    }
+  }
+
+  /** The crossing detector of [[maintainedPairs]]' cap-crossing
+    * invariant: a (band, key) bucket whose previous-store size exceeded
+    * `maxBucket` and whose current size is within it. Both crawls'
+    * bucket sizes are RE-DERIVED from the two stores' band inputs
+    * (nothing extra to persist; banding is a narrow projection + one
+    * count per store). Empty → the incremental ≡ full invariant held
+    * this crawl; non-empty → re-expand exactly these buckets (the
+    * checked mode) or schedule a full rebuild.
+    *
+    * @return (band, key, prev_size, next_size)
+    */
+  private def bucketCrossings(prevStore: DataFrame, store: DataFrame,
+                              bands: Column, maxBucket: Int): DataFrame = {
+    def sized(st: DataFrame, n: String) = st
+      .select(col("doc_id"), explode(bands).as("b"))
+      .groupBy(col("b.band").as("band"), col("b.key").as("key"))
+      .agg(count(lit(1)).as(n))
+    sized(prevStore, "prev_size")
+      .filter(col("prev_size") > maxBucket)
+      .join(sized(store, "next_size"), Seq("band", "key"))
+      .filter(col("next_size") <= maxBucket)
+      .select(col("band"), col("key"), col("prev_size"), col("next_size"))
   }
 
   /** Incremental connected-component maintenance — the CLUSTER leg of
@@ -504,25 +563,12 @@ object Dedup {
   /** Banded-LSH candidate pairs from MinHash signatures: bands of
     * `rowsPerBand` signature slots; docs sharing any band key are
     * candidates. Bucket-grouped on (band, key) and pair-expanded in the
-    * array — never all-pairs, and the signature plan runs once.
+    * array ([[bandedPairs]]) — never all-pairs, and the signature plan
+    * runs once.
     */
   def lshCandidates(signatures: DataFrame, numPerms: Int, rowsPerBand: Int,
-                    maxBucket: Int = 100000): DataFrame = {
-    val numBands = numPerms / rowsPerBand
-    val bands = array((0 until numBands).map { bnd =>
-      struct(lit(bnd).as("band"),
-        concat_ws("_", (0 until rowsPerBand).map(r => col(s"sig${bnd * rowsPerBand + r}")): _*).as("key"))
-    }: _*)
-    val exploded = signatures
-      .select(col("doc_id"), explode(bands).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"), lit(0L).as("n"))
-    pairsFromBuckets(
-      exploded.groupBy(col("band"), col("key"))
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ds")),
-      maxBucket)
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-  }
+                    maxBucket: Int = 100000): DataFrame =
+    bandedPairs(signatures, minhashBanding(numPerms, rowsPerBand), maxBucket)
 
   /** Full MinHash-LSH near-dup: candidates from banded LSH, then exact
     * Jaccard verification restricted to candidates only (the
@@ -843,10 +889,10 @@ object Dedup {
         lit("computed").as("src"))
 
   /** Incremental SimHash store maintenance — the HAMMING-family leg of
-    * the crawl-incremental index chain: [[SnapshotDiff.diffStored]]
-    * classifies docs by text fingerprint, only added/changed docs
-    * re-hash (`incr_simhash_docs` observe), unchanged keep their
-    * stored fingerprint, removed drop.
+    * the crawl-incremental index chain ([[maintainStore]]):
+    * [[SnapshotDiff.diffStored]] classifies docs by text fingerprint,
+    * only added/changed docs re-hash (`incr_simhash_docs` observe),
+    * unchanged keep their stored fingerprint, removed drop.
     *
     * @return next store, same schema, `src` ∈ computed|retained
     */
@@ -862,39 +908,24 @@ object Dedup {
     * ([[incrementalSignaturesFrom]]'s shared-diff contract). */
   def incrementalSimhashFrom(d: DataFrame, newDocs: DataFrame,
                              prevStore: DataFrame, id: Column, text: Column,
-                             bits: Int = 32): DataFrame = {
-    val changes = d.filter(col("status").isin("added", "changed"))
-      .select(col("id").as("doc_id"))
-      .localCheckpoint(false) // compute-set reused for join + observe
-    val toCompute = newDocs.select(id.as("doc_id"), text.as("text"))
-      .join(changes, "doc_id")
-    val fresh = simhashStore(
-      toCompute.observe("incr_simhash_docs", count(lit(1)).as("n_docs")),
-      col("doc_id"), col("text"), bits)
-    val retained = prevStore
-      .join(d.filter(col("status") === "unchanged").select(col("id").as("doc_id")),
-        "doc_id")
-      .select(col("doc_id"), col("content_fp"), col("simhash"),
-        lit("retained").as("src"))
-    fresh.unionByName(retained)
-  }
+                             bits: Int = 32): DataFrame =
+    maintainStore(d, newDocs.select(id.as("doc_id"), text.as("text")), prevStore,
+        Seq("doc_id", "content_fp", "simhash"), "incr_simhash_docs", "n_docs") {
+      (toCompute, _) => simhash(toCompute, col("doc_id"), col("text"), bits)
+    }
 
   /** Delta-scoped HAMMING near-dup maintenance over any maintained
-    * fingerprint store — [[incrementalLshPairs]]' survivor discipline
-    * for the Manku pigeonhole family ([[hammingNearDups]]), serving
-    * text SimHash and image/audio perceptual hashes alike. Unlike the
-    * shingle families, VERIFICATION IS FREE here: the fingerprints live
-    * in the store, so fresh candidates verify with one `bit_count(xor)`
-    * per pair — no re-hashing, no payload reads. Survivor pairs (both
-    * endpoints `retained`) carry their hamming verbatim; fresh pairs
-    * come only from bands containing a computed member (≥1 computed
-    * endpoint after expansion). With the family's default NO-DROP cap
-    * the `maintained ≡ full hammingNearDups(store)` equivalence is
-    * unconditional (the cap-crossing caveat of [[incrementalLshPairs]]
-    * only exists under a finite `maxBucket`). Deployments that DO cap
-    * hot fingerprints should call [[incrementalHammingNearDupsChecked]],
-    * which closes the caveat in-chain exactly like
-    * [[incrementalLshPairsChecked]] does for the MinHash family.
+    * fingerprint store — [[maintainedPairs]] over Manku pigeonhole
+    * bands ([[hammingNearDups]]), serving text SimHash and image/audio
+    * perceptual hashes alike. Unlike the shingle families, VERIFICATION
+    * IS FREE here: the fingerprints live in the store, so fresh
+    * candidates verify with one `bit_count(xor)` per pair — no
+    * re-hashing, no payload reads — and survivor pairs carry their
+    * hamming verbatim. With the family's default NO-DROP cap
+    * maintained ≡ full `hammingNearDups(store)` unconditionally;
+    * deployments that cap hot fingerprints call
+    * [[incrementalHammingNearDupsChecked]] (invariant on
+    * [[maintainedPairs]]).
     *
     * @param fpStore   (doc_id, fp, src) — the maintained store's
     *                  fingerprint slice
@@ -903,131 +934,54 @@ object Dedup {
   def incrementalHammingNearDups(fpStore: DataFrame, prevPairs: DataFrame,
                                  maxHamming: Int, bits: Int,
                                  maxBucket: Int = Int.MaxValue,
-                                 spareBlocks: Int = 1): DataFrame = {
-    require(spareBlocks >= 1, s"spareBlocks must be >= 1, got $spareBlocks")
-    require(maxHamming >= 0 && maxHamming + spareBlocks <= bits,
-      s"need 0 <= maxHamming and maxHamming+spareBlocks blocks <= $bits bits, " +
-        s"got $maxHamming + $spareBlocks")
-    require(bits <= 64, s"fingerprints are long-typed: bits must be <= 64, got $bits")
-    val fp = fpStore.select(col("doc_id"), col("fp"),
-        (col("src") === "computed").cast("long").as("n"))
-      .localCheckpoint(true) // eager: band explode + both verify joins + survivors — multi-action callers (e.g. the checked variant) must not race a lazy materialization
-    val exploded = fp.select(col("doc_id"), col("n"),
-        explode(hammingBands(maxHamming, bits, spareBlocks)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"),
-        col("n"))
-    val freshPairs = pairsFromBuckets(
-      exploded.groupBy(col("band"), col("key"))
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ds"),
-          max(col("n")).as("touched"))
-        .filter(col("touched") === 1L)
-        .drop("touched"),
-      maxBucket)
-      .filter(col("na") === 1L || col("nb") === 1L)
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-      .join(fp.select(col("doc_id").as("doc_a"), col("fp").as("sa")), "doc_a")
-      .join(fp.select(col("doc_id").as("doc_b"), col("fp").as("sb")), "doc_b")
-      .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-    val retained = fp.filter(col("n") === 0L).select(col("doc_id"))
-    val survivors = prevPairs.select(col("doc_a"), col("doc_b"), col("hamming"))
-      .join(retained.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
-      .join(retained.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
-    freshPairs.unionByName(survivors)
-  }
+                                 spareBlocks: Int = 1): DataFrame =
+    maintainedPairs(fpStore, prevPairs, hammingBanding(maxHamming, bits, spareBlocks),
+      maxBucket).drop("origin")
 
-  /** Cap-crossing detector for the HAMMING family —
-    * [[cappedBucketCrossings]]'s predicate over Manku pigeonhole bands
-    * instead of MinHash bands: a (band, key) bucket whose PREVIOUS-store
-    * size exceeded `maxBucket` (its pairs were cap-dropped last crawl)
-    * but whose current size is within the cap holds retained–retained
-    * pairs the delta leg of [[incrementalHammingNearDups]] cannot see —
-    * they are neither survivors (absent from `prevPairs`) nor fresh
-    * (no computed endpoint), and that stays true even when the bucket
-    * ALSO gained a computed member (same blind spot as the MinHash
-    * detector's retired `touched = 0` predicate). Band sizes are
-    * re-derived from the two stores' `fp` columns; nothing extra is
-    * persisted.
+  /** The cap-crossing buckets of a hamming maintenance step over Manku
+    * bands — see [[bucketCrossings]] for the predicate.
     *
     * @return (band, key, prev_size, next_size) — the crossing buckets
     */
   def hammingCappedBucketCrossings(prevStore: DataFrame, fpStore: DataFrame,
                                    maxHamming: Int, bits: Int, maxBucket: Int,
-                                   spareBlocks: Int = 1): DataFrame = {
-    def sized(st: DataFrame, n: String) = st
-      .select(col("doc_id"),
-        explode(hammingBands(maxHamming, bits, spareBlocks)).as("b"))
-      .groupBy(col("b.band").as("band"), col("b.key").as("key"))
-      .agg(count(lit(1)).as(n))
-    sized(prevStore, "prev_size")
-      .filter(col("prev_size") > maxBucket)
-      .join(sized(fpStore, "next_size"), Seq("band", "key"))
-      .filter(col("next_size") <= maxBucket)
-      .select(col("band"), col("key"), col("prev_size"), col("next_size"))
-  }
+                                   spareBlocks: Int = 1): DataFrame =
+    bucketCrossings(prevStore, fpStore,
+      hammingBanding(maxHamming, bits, spareBlocks).bands, maxBucket)
 
   /** [[incrementalHammingNearDups]] with the finite-`maxBucket`
-    * cap-crossing caveat CLOSED in-chain — the hamming counterpart of
-    * [[incrementalLshPairsChecked]]: [[hammingCappedBucketCrossings]]
-    * runs against the previous store as part of the maintenance step
-    * and exactly the flagged buckets are re-expanded from the
-    * maintained store (verified with the same stored-fingerprint
-    * `bit_count(xor)` — still no re-hashing), so the maintained set is
-    * COMPLETE vs a full `hammingNearDups(store)` recompute under any
-    * cap — including crossing buckets that gained a computed member.
-    * PRECISE INVARIANT (same as [[incrementalLshPairsChecked]]):
-    * maintained ⊇ full, equal unless a bucket crossed UP over the cap
-    * this crawl; an up-crossed bucket's surviving pairs are kept
-    * deliberately — their stored fingerprints are unchanged, so they
-    * remain exact-verified TRUE pairs the full recompute loses to its
-    * own cap artifact. Crossings are rare by construction (a >cap
-    * bucket must shrink under cap between crawls), so the extra leg is
-    * empty in the steady state and the detector's two banded counts are
-    * the only added cost.
+    * cap-crossing caveat CLOSED in-chain (the checked mode of
+    * [[maintainedPairs]]; invariant there): flagged buckets are
+    * re-expanded from the maintained store and verified with the same
+    * stored-fingerprint `bit_count(xor)` — still no re-hashing.
     */
   def incrementalHammingNearDupsChecked(prevStore: DataFrame, fpStore: DataFrame,
                                         prevPairs: DataFrame, maxHamming: Int,
                                         bits: Int, maxBucket: Int,
-                                        spareBlocks: Int = 1): DataFrame = {
-    val base = incrementalHammingNearDups(fpStore, prevPairs, maxHamming, bits,
-        maxBucket, spareBlocks)
-      .localCheckpoint(true) // eager: output union AND the dedup anti-join below
-    val flagged = hammingCappedBucketCrossings(prevStore, fpStore, maxHamming,
-      bits, maxBucket, spareBlocks).select(col("band"), col("key"))
-    val fp = fpStore.select(col("doc_id"), col("fp"))
-    // Flagged buckets' CURRENT membership (retained docs plus any
-    // computed members they gained): band the store once, keep only
-    // flagged keys (a tiny set; AQE broadcasts the join), expand +
-    // verify; pairs already in the fresh leg fall out in the anti-join.
-    val exploded = fp
-      .select(col("doc_id"), lit(0L).as("n"),
-        explode(hammingBands(maxHamming, bits, spareBlocks)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"),
-        col("n"))
-      .join(flagged, Seq("band", "key"))
-    val reexpanded = pairsFromBuckets(
-      exploded.groupBy(col("band"), col("key"))
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ds")),
-      maxBucket)
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-      .join(fp.select(col("doc_id").as("doc_a"), col("fp").as("sa")), "doc_a")
-      .join(fp.select(col("doc_id").as("doc_b"), col("fp").as("sb")), "doc_b")
-      .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-      // a re-expanded pair may already be present via another bucket
-      // (survivor from prevPairs, or fresh via a touched bucket) — the
-      // legs stay disjoint
-      .join(base.select(col("doc_a"), col("doc_b")),
-        Seq("doc_a", "doc_b"), "left_anti")
-    base.unionByName(reexpanded)
+                                        spareBlocks: Int = 1): DataFrame =
+    maintainedPairs(fpStore, prevPairs, hammingBanding(maxHamming, bits, spareBlocks),
+      maxBucket, Some(prevStore)).drop("origin")
+
+  /** The Manku family for the pair core: multi-index bands over a long
+    * `fp` column, verified by `bit_count(xor) ≤ maxHamming` against the
+    * slice's stored fingerprints. */
+  private def hammingBanding(maxHamming: Int, bits: Int, spareBlocks: Int): Banding = {
+    require(spareBlocks >= 1, s"spareBlocks must be >= 1, got $spareBlocks")
+    require(maxHamming >= 0 && maxHamming + spareBlocks <= bits,
+      s"need 0 <= maxHamming and maxHamming+spareBlocks blocks <= $bits bits, " +
+        s"got $maxHamming + $spareBlocks")
+    require(bits <= 64, s"fingerprints are long-typed: bits must be <= 64, got $bits")
+    Banding(Seq("fp"), hammingBands(maxHamming, bits, spareBlocks),
+      Seq("doc_a", "doc_b", "hamming"),
+      (cands, fp) => cands
+        .join(fp.select(col("doc_id").as("doc_a"), col("fp").as("sa")), "doc_a")
+        .join(fp.select(col("doc_id").as("doc_b"), col("fp").as("sb")), "doc_b")
+        .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))))
+        .filter(col("hamming") <= maxHamming)
+        .select(col("doc_a"), col("doc_b"), col("hamming")))
   }
 
-  /** The Manku multi-index band array over a long `fp` column — shared
-    * by [[hammingNearDups]] and [[incrementalHammingNearDups]]. */
+  /** The Manku multi-index band array over a long `fp` column. */
   private def hammingBands(maxHamming: Int, bits: Int,
                            spareBlocks: Int): Column = {
     val numBlocks = maxHamming + spareBlocks
@@ -1099,31 +1053,8 @@ object Dedup {
     * key space ≥ corpus size. Answers never change — candidates are
     * exact-verified either way (spec-pinned s-equivalence). */
   def hammingNearDups(fpTable: DataFrame, maxHamming: Int, bits: Int,
-                      maxBucket: Int = Int.MaxValue, spareBlocks: Int = 1): DataFrame = {
-    require(spareBlocks >= 1, s"spareBlocks must be >= 1, got $spareBlocks")
-    require(maxHamming >= 0 && maxHamming + spareBlocks <= bits,
-      s"need 0 <= maxHamming and maxHamming+spareBlocks blocks <= $bits bits, " +
-        s"got $maxHamming + $spareBlocks")
-    require(bits <= 64, s"fingerprints are long-typed: bits must be <= 64, got $bits")
-    // the fingerprint plan feeds three branches (band explode + both
-    // verify joins) — materialize once, like nearDupPairs' shingle table
-    val fp = fpTable.select(col("doc_id"), col("fp")).localCheckpoint(false)
-    val exploded = fp.select(col("doc_id"),
-        explode(hammingBands(maxHamming, bits, spareBlocks)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.key").as("key"), lit(0L).as("n"))
-    val candidates = pairsFromBuckets(
-      exploded.groupBy(col("band"), col("key"))
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ds")),
-      maxBucket)
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-    candidates
-      .join(fp.select(col("doc_id").as("doc_a"), col("fp").as("sa")), "doc_a")
-      .join(fp.select(col("doc_id").as("doc_b"), col("fp").as("sb")), "doc_b")
-      .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-  }
+                      maxBucket: Int = Int.MaxValue, spareBlocks: Int = 1): DataFrame =
+    bandedPairs(fpTable, hammingBanding(maxHamming, bits, spareBlocks), maxBucket)
 
   /** Bloom-prefiltered incremental exact dedup — "which of today's crawl
     * is genuinely new?" at the scale where the history side can never be
@@ -1367,31 +1298,18 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, id: Column, text: Column,
                        threshold: Double, w: Int = 3): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    val tPpm = math.floor(threshold * 1e6).toLong
+    val tPpm = thresholdPpm(threshold)
     val sets = shingled(docs, id, text, w).localCheckpoint(false)
     val post = sets.select(col("doc_id"), explode(col("sh")).as("shingle"))
       .select(col("doc_id"), xxhash64(col("shingle")).as("sid"))
     val dfc = post.groupBy(col("sid")).agg(count(lit(1)).as("df"))
-    // The emit filter below is the exact cross-multiply c·10⁶ ≥ tPpm·n
-    // (⟺ floored ppm ≥ tPpm), so the smallest passing intersection is
-    // cmin = ⌈tPpm·n / 10⁶⌉ — computed in the SAME integer arithmetic
-    // here (a double ceil(threshold·n) can exceed it by 1 on binary-
-    // unrepresentable thresholds, shortening the prefix and silently
-    // breaking candidate completeness at the boundary).
     val prefix = post
       .join(dfc, "sid")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(struct(col("df"), col("sid")))).as("ranked"))
-      .select(col("doc_id").as("probe_id"), col("ranked"),
-        call_function("div",
-          lit(tPpm) * size(col("ranked")).cast("long") + lit(999999L),
-          lit(1000000L)).as("cmin"))
-      .select(col("probe_id"),
+      .select(col("doc_id").as("probe_id"),
         slice(col("ranked"), lit(1),
-          greatest(lit(1L), size(col("ranked")).cast("long") - col("cmin") + 1L)
-            .cast("int")).as("pref"))
+          prefixLen(size(col("ranked")).cast("long"), tPpm).cast("int")).as("pref"))
       .select(col("probe_id"), explode(col("pref.sid")).as("sid"))
     val cands = prefix
       .join(post.select(col("doc_id").as("cand_id"), col("sid")), "sid")
@@ -1399,10 +1317,35 @@ object Dedup {
       .select(least(col("probe_id"), col("cand_id")).as("doc_a"),
         greatest(col("probe_id"), col("cand_id")).as("doc_b"))
       .distinct()
-    val strSets = sets.select(col("doc_id"), col("sh"))
+    verifyContainment(cands, sets, tPpm)
+  }
+
+  /** `threshold` as floored ppm, the integer unit of every containment
+    * filter. */
+  private def thresholdPpm(threshold: Double): Long = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0, 1], got $threshold")
+    math.floor(threshold * 1e6).toLong
+  }
+
+  /** Directed-prefix length max(1, n − cmin + 1) of an n-shingle doc.
+    * The emit filter is the exact cross-multiply c·10⁶ ≥ tPpm·n
+    * (⟺ floored ppm ≥ tPpm), so the smallest passing intersection is
+    * cmin = ⌈tPpm·n / 10⁶⌉ — computed here in the SAME integer
+    * arithmetic (a double ceil(threshold·n) can exceed it by 1 on
+    * binary-unrepresentable thresholds, shortening the prefix and
+    * silently breaking candidate completeness at the boundary). */
+  private def prefixLen(n: Column, tPpm: Long): Column =
+    greatest(lit(1L),
+      n - call_function("div", lit(tPpm) * n + lit(999999L), lit(1000000L)) + 1L)
+
+  /** Exact directed containment of candidate (doc_a, doc_b) pairs
+    * against the STRING shingle sets (doc_id, sh): both ratios in
+    * floored ppm, kept when either reaches `tPpm`. */
+  private def verifyContainment(cands: DataFrame, sets: DataFrame, tPpm: Long): DataFrame =
     cands
-      .join(strSets.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
-      .join(strSets.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
+      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
+      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("sha"), col("shb"))).cast("long").as("c"),
         size(col("sha")).cast("long").as("na"),
@@ -1411,14 +1354,12 @@ object Dedup {
         call_function("div", col("c") * lit(1000000L), col("na")).as("cont_ab_ppm"),
         call_function("div", col("c") * lit(1000000L), col("nb")).as("cont_ba_ppm"))
       .filter(greatest(col("cont_ab_ppm"), col("cont_ba_ppm")) >= tPpm)
-  }
 
   /** Shingle-containment INDEX store — the crawl-persistent state that
     * makes [[containmentPairs]] maintainable at O(delta)
     * ([[incrementalContainmentPairs]]): per doc, its distinct shingle
     * ids with a `pref` flag marking the directed-prefix slots (the
-    * `n − ⌈t·n⌉ + 1` df-rarest shingles, cmin computed in the same
-    * integer cross-multiply as the emit filter) plus the text content
+    * [[prefixLen]] df-rarest shingles) plus the text content
     * fingerprint. Completeness of the prefix filter is ORDER-
     * INDEPENDENT (pigeonhole: any fixed n−cmin+1-subset of A's shingles
     * must hit B when |A∩B| ≥ cmin), so a stored prefix stays complete
@@ -1429,46 +1370,44 @@ object Dedup {
     */
   def containmentIndex(docs: DataFrame, id: Column, text: Column,
                        threshold: Double, w: Int = 3): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    val post = docs.repartition(id)
+    val tPpm = thresholdPpm(threshold)
+    val post = containmentPostings(docs, id, text, w)
+    flagPrefixes(post, tPpm,
+      dfc = post.groupBy(col("sid")).agg(count(lit(1)).as("df")))
+  }
+
+  /** (doc_id, content_fp, sid) — one row per distinct shingle id of a
+    * doc, materialized for the df aggregate AND the flagging join. */
+  private def containmentPostings(docs: DataFrame, id: Column, text: Column,
+                                  w: Int): DataFrame =
+    docs.repartition(id)
       .select(id.as("doc_id"), TextFns.hash60(text).as("content_fp"),
         graft.catalyst.WordShingles(text, w).as("sh"))
       .filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("content_fp"), explode(col("sh")).as("shingle"))
       .select(col("doc_id"), col("content_fp"), xxhash64(col("shingle")).as("sid"))
-      .localCheckpoint(false) // feeds the df aggregate AND the flagging join
-    flagPrefixes(post, threshold,
-      dfc = post.groupBy(col("sid")).agg(count(lit(1)).as("df")))
-  }
+      .localCheckpoint(false)
 
   /** Rank each doc's sids by (df, sid) ascending and flag the first
-    * max(1, n − cmin + 1) as the directed probe prefix. */
-  private def flagPrefixes(post: DataFrame, threshold: Double,
-                           dfc: DataFrame): DataFrame = {
-    val tPpm = math.floor(threshold * 1e6).toLong
+    * [[prefixLen]] as the directed probe prefix. */
+  private def flagPrefixes(post: DataFrame, tPpm: Long, dfc: DataFrame): DataFrame =
     post.join(dfc, "sid")
       .groupBy(col("doc_id"), col("content_fp"))
       .agg(sort_array(collect_set(struct(col("df"), col("sid")))).as("ranked"))
       .select(col("doc_id"), col("content_fp"), col("ranked"),
-        greatest(lit(1L), size(col("ranked")).cast("long")
-          - call_function("div",
-              lit(tPpm) * size(col("ranked")).cast("long") + lit(999999L),
-              lit(1000000L)) + 1L).as("plen"))
+        prefixLen(size(col("ranked")).cast("long"), tPpm).as("plen"))
       .select(col("doc_id"), col("content_fp"), col("plen"),
         posexplode(col("ranked")))
       .select(col("doc_id"), col("content_fp"), col("col.sid").as("sid"),
         (col("pos") < col("plen")).as("pref"), lit("computed").as("src"))
-  }
 
   /** Incremental maintenance of the [[containmentIndex]] store — the
     * ASYMMETRIC leg of the crawl-incremental dedup chain
-    * (q259 signatures → q262 candidates → q287 verified pairs → here):
-    * [[SnapshotDiff.diffStored]] classifies docs by text fingerprint
-    * against the store's (doc_id, fp) slice; only added/changed docs
-    * are re-shingled (`incr_containment_docs` observe), unchanged docs
-    * keep their (sid, pref) rows VERBATIM — their stale-df prefixes
-    * remain complete by the order-independence argument on
+    * (q259 signatures → q262 candidates → q287 verified pairs → here),
+    * a [[maintainStore]] binding: only added/changed docs are
+    * re-shingled (`incr_containment_docs` observe), unchanged docs keep
+    * their (sid, pref) rows VERBATIM — their stale-df prefixes remain
+    * complete by the order-independence argument on
     * [[containmentIndex]] — and removed/changed docs' old rows drop.
     * Fresh docs are flagged under the CURRENT store-derived df (one
     * count aggregate over the maintained store, q282's
@@ -1479,33 +1418,19 @@ object Dedup {
   def incrementalContainmentIndex(newDocs: DataFrame, prevStore: DataFrame,
                                   id: Column, text: Column,
                                   threshold: Double, w: Int = 3): DataFrame = {
-    val d = SnapshotDiff.diffStored(
-      prevStore.select(col("doc_id").as("id"), col("content_fp").as("fp")).distinct(),
-      newDocs, id, TextFns.hash60(text))
-    val changes = d.filter(col("status").isin("added", "changed"))
-      .select(col("id").as("doc_id"))
-      .localCheckpoint(false) // compute-set reused for join + observe
-    val toCompute = newDocs.select(id.as("doc_id"), text.as("text"))
-      .join(changes, "doc_id")
-    val freshPost = toCompute
-      .observe("incr_containment_docs", count(lit(1)).as("n_docs"))
-      .repartition(col("doc_id"))
-      .select(col("doc_id"), TextFns.hash60(col("text")).as("content_fp"),
-        graft.catalyst.WordShingles(col("text"), w).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), col("content_fp"), explode(col("sh")).as("shingle"))
-      .select(col("doc_id"), col("content_fp"), xxhash64(col("shingle")).as("sid"))
-      .localCheckpoint(false) // feeds current-df aggregate AND flagging
-    val retained = prevStore
-      .join(d.filter(col("status") === "unchanged").select(col("id").as("doc_id")),
-        "doc_id")
-      .select(col("doc_id"), col("content_fp"), col("sid"), col("pref"),
-        lit("retained").as("src"))
-      .localCheckpoint(false) // feeds current-df aggregate AND the union
-    val dfc = retained.select(col("sid"))
-      .unionByName(freshPost.select(col("sid")))
-      .groupBy(col("sid")).agg(count(lit(1)).as("df"))
-    flagPrefixes(freshPost, threshold, dfc).unionByName(retained)
+    val tPpm = thresholdPpm(threshold)
+    maintainStore(
+        SnapshotDiff.diffStored(
+          prevStore.select(col("doc_id").as("id"), col("content_fp").as("fp")).distinct(),
+          newDocs, id, TextFns.hash60(text)),
+        newDocs.select(id.as("doc_id"), text.as("text")), prevStore,
+        Seq("doc_id", "content_fp", "sid", "pref"), "incr_containment_docs", "n_docs",
+        shareRetained = true) { (toCompute, retained) =>
+      val post = containmentPostings(toCompute, col("doc_id"), col("text"), w)
+      flagPrefixes(post, tPpm, retained.select(col("sid"))
+        .unionByName(post.select(col("sid")))
+        .groupBy(col("sid")).agg(count(lit(1)).as("df")))
+    }
   }
 
   /** Incremental CONTAINMENT pair maintenance — [[containmentPairs]]
@@ -1535,15 +1460,10 @@ object Dedup {
   def incrementalContainmentPairs(newDocs: DataFrame, id: Column, text: Column,
                                   store: DataFrame, prevPairs: DataFrame,
                                   threshold: Double, w: Int = 3): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    val tPpm = math.floor(threshold * 1e6).toLong
-    val retainedIds = store.filter(col("src") === "retained")
-      .select(col("doc_id")).distinct()
-    val survivors = prevPairs
-      .select(col("doc_a"), col("doc_b"), col("cont_ab_ppm"), col("cont_ba_ppm"))
-      .join(retainedIds.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
-      .join(retainedIds.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
+    val tPpm = thresholdPpm(threshold)
+    val survivors = bothIn(
+      prevPairs.select(col("doc_a"), col("doc_b"), col("cont_ab_ppm"), col("cont_ba_ppm")),
+      store.filter(col("src") === "retained").select(col("doc_id")).distinct())
     val post = store.select(col("doc_id"), col("sid"),
       (col("src") === "computed").as("comp"))
     val compPref = store.filter(col("src") === "computed" && col("pref"))
@@ -1568,17 +1488,6 @@ object Dedup {
         .observe("incr_containment_verify_docs", count(lit(1)).as("n_docs")),
       col("doc_id"), col("text"), w)
       .localCheckpoint(false) // consumed twice: the doc_a AND doc_b joins
-    cands
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sha")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("shb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("sha"), col("shb"))).cast("long").as("c"),
-        size(col("sha")).cast("long").as("na"),
-        size(col("shb")).cast("long").as("nb"))
-      .select(col("doc_a"), col("doc_b"),
-        call_function("div", col("c") * lit(1000000L), col("na")).as("cont_ab_ppm"),
-        call_function("div", col("c") * lit(1000000L), col("nb")).as("cont_ba_ppm"))
-      .filter(greatest(col("cont_ab_ppm"), col("cont_ba_ppm")) >= tPpm)
-      .unionByName(survivors)
+    verifyContainment(cands, sets, tPpm).unionByName(survivors)
   }
 }

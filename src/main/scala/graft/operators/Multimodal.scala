@@ -891,32 +891,19 @@ object Multimodal {
     * stops tracking the crawl delta. Returns the NEXT store: same
     * schema, `src` marking `decoded` vs `retained` provenance, so the
     * output of crawl N is the input of crawl N+1 and the decode cost of
-    * every run is O(delta), never O(corpus).
+    * every run is O(delta), never O(corpus) — a
+    * [[Dedup.maintainStore]] binding.
     */
   def incrementalPhash(newMedia: DataFrame, prevStore: DataFrame,
-                       fingerprint: DataFrame => DataFrame): DataFrame = {
-    val d = SnapshotDiff.diffStored(
-      prevStore.select(col("media_id").as("id"), col("payload_fp").as("fp")),
-      newMedia, col("media_id"), xxhash64(col("payload")))
-    // The change set is reused twice (decode input + payload_fp carry);
-    // the lazy checkpoint keeps the diff join from re-running — it is
-    // O(delta) rows of (id, fp), never payloads.
-    val changes = d.filter(col("status").isin("added", "changed"))
-      .select(col("id").as("media_id"), col("new_fp"))
-      .localCheckpoint(false)
-    val toDecode = newMedia.join(changes, "media_id")
-    val fresh = fingerprint(
-        toDecode.observe("incr_phash_decodes", count(lit(1)).as("n_decoded")))
-      .join(changes.select(col("media_id"), col("new_fp").as("payload_fp")), "media_id")
-      .select(col("media_id"), col("payload_fp"), col("phash"),
-        lit("decoded").as("src"))
-    val retained = prevStore
-      .join(d.filter(col("status") === "unchanged").select(col("id").as("media_id")),
-        "media_id")
-      .select(col("media_id"), col("payload_fp"), col("phash"),
-        lit("retained").as("src"))
-    fresh.unionByName(retained)
-  }
+                       fingerprint: DataFrame => DataFrame): DataFrame =
+    Dedup.maintainStore(
+        SnapshotDiff.diffStored(
+          prevStore.select(col("media_id").as("id"), col("payload_fp").as("fp")),
+          newMedia, col("media_id"), xxhash64(col("payload"))),
+        newMedia, prevStore, Seq("media_id", "payload_fp", "phash"),
+        "incr_phash_decodes", "n_decoded", computedTag = "decoded") {
+      (toDecode, _) => fingerprint(toDecode)
+    }
 
   /** Synthesize REAL multi-frame grayscale GIF payloads, one per doc:
     * `id % 20 + 2` frames of `(id%12+4)×(id%8+4)`, frame `fr` pixel(x,y)

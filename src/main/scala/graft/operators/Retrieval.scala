@@ -155,22 +155,11 @@ object Retrieval {
     * hash60-text diff per crawl feeds every text-keyed store). */
   def incrementalPostingsFrom(d: DataFrame, newDocs: DataFrame,
                               prevStore: DataFrame,
-                              id: Column, text: Column): DataFrame = {
-    val changes = d.filter(col("status").isin("added", "changed"))
-      .select(col("id").as("doc_id"))
-      .localCheckpoint(false) // compute-set reused for join + observe
-    val toCompute = newDocs.select(id.as("doc_id"), text.as("text"))
-      .join(changes, "doc_id")
-    val fresh = postingsStore(
-      toCompute.observe("incr_postings_docs", count(lit(1)).as("n_docs")),
-      col("doc_id"), col("text"))
-    val retained = prevStore
-      .join(d.filter(col("status") === "unchanged").select(col("id").as("doc_id")),
-        "doc_id")
-      .select(col("doc_id"), col("content_fp"), col("term"), col("tf"),
-        col("dl"), lit("retained").as("src"))
-    fresh.unionByName(retained)
-  }
+                              id: Column, text: Column): DataFrame =
+    Dedup.maintainStore(d, newDocs.select(id.as("doc_id"), text.as("text")), prevStore,
+        Seq("doc_id", "content_fp", "term", "tf", "dl"), "incr_postings_docs", "n_docs") {
+      (toCompute, _) => postingsStore(toCompute, col("doc_id"), col("text"))
+    }
 
   /** Ranking-churn audit between two top-k runs of the same query
     * battery — the serving-stability SLO a pipeline checks after

@@ -578,32 +578,15 @@ object Similarity {
     *         to a full re-assignment at O(delta) scoring cost
     */
   def incrementalAssignments(newVectors: DataFrame, prevStore: DataFrame,
-                             centroids: DataFrame): DataFrame = {
-    val d = SnapshotDiff.diffStored(
-      prevStore.select(col("vec_id").as("id"), col("content_fp").as("fp")),
-      newVectors, col("vec_id"), embeddingFp(col("embedding")))
-    // Reused twice (compute input + content_fp carry); the lazy
-    // checkpoint keeps the diff join from re-running — O(delta) rows of
-    // (id, fp), never embeddings.
-    val changes = d.filter(col("status").isin("added", "changed"))
-      .select(col("id").as("vec_id"), col("new_fp"))
-      .localCheckpoint(false)
-    val toCompute = newVectors.select(col("vec_id"), col("embedding"))
-      .join(changes, "vec_id")
-    val fresh = assign(
-        toCompute.observe("incr_assign_vecs", count(lit(1)).as("n_vecs")),
-        centroids)
-      .select(col("vec_id"), col("centroid_id"))
-      .join(changes.select(col("vec_id"), col("new_fp").as("content_fp")), "vec_id")
-      .select(col("vec_id"), col("content_fp"), col("centroid_id"),
-        lit("computed").as("src"))
-    val retained = prevStore
-      .join(d.filter(col("status") === "unchanged").select(col("id").as("vec_id")),
-        "vec_id")
-      .select(col("vec_id"), col("content_fp"), col("centroid_id"),
-        lit("retained").as("src"))
-    fresh.unionByName(retained)
-  }
+                             centroids: DataFrame): DataFrame =
+    Dedup.maintainStore(
+        SnapshotDiff.diffStored(
+          prevStore.select(col("vec_id").as("id"), col("content_fp").as("fp")),
+          newVectors, col("vec_id"), embeddingFp(col("embedding"))),
+        newVectors.select(col("vec_id"), col("embedding")), prevStore,
+        Seq("vec_id", "content_fp", "centroid_id"), "incr_assign_vecs", "n_vecs") {
+      (toCompute, _) => assign(toCompute, centroids)
+    }
 
   /** Per-micro-batch assignment UPSERT — the STREAMING form of
     * [[incrementalAssignments]], for ingest-time ANN-routing freshness

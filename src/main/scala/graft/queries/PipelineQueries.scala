@@ -2,12 +2,12 @@ package graft.queries
 
 import java.nio.file.{Files, Path, Paths}
 import java.time.Instant
-import java.util.Comparator
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryModule, Tables}
+import graft.Staging.deleteRecursively
 import graft.functions.Tstamps
 import graft.pipeline._
 
@@ -876,15 +876,6 @@ object PipelineQueries extends QueryModule {
     Files.createDirectories(p)
     p.toString
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      // walk returns a lazily-populated stream backed by open directory
-      // handles — close it (same fix as StreamingQueries.deleteRecursively)
-      val walk = Files.walk(p)
-      try walk.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q17_pipeline_roundtrip" -> (pipelineRoundtrip _),

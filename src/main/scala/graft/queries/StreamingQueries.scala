@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 import graft.{QueryModule, Tables}
+import graft.Staging.deleteRecursively
 import graft.functions.ExactAgg._
 
 /** Per-user running state for q33/q48 (top-level so the state encoder
@@ -275,12 +276,15 @@ object StreamingQueries extends QueryModule {
   /** Per-query state-store provider selection (VERDICT r16 #3: "the
     * RocksDB/HDFS-store choice per query is a legitimate engine
     * decision — pick per measured crossover"). Measured r17
-    * (StreamProbe at sf0.1): a RocksDB commit costs snapshot + zip +
-    * one fsync PER FILE per store per batch (q132's 4-store join:
-    * 52s of summed commit latency, ~85% in
-    * rocksdbCommitFileSyncLatencyMs/SaveZipFiles); the HDFS-backed
-    * provider commits one delta file per store (q132 13.1s -> 8.6s,
-    * q215 5.5s -> 4.0s, q180 4.8s -> 3.8s wall). The crossover is
+    * (StreamProbe at sf0.1) on the multi-batch drains q132, q215 and
+    * q180: there a RocksDB commit costs snapshot + zip + one fsync PER
+    * FILE per store per batch (q132's 4-store join: 52s of summed
+    * commit latency, ~85% in
+    * rocksdbCommitFileSyncLatencyMs/SaveZipFiles), and the same drains
+    * ran faster on the HDFS-backed provider (q132 13.1s -> 8.6s,
+    * q215 5.5s -> 4.0s, q180 4.8s -> 3.8s wall). That is not a general
+    * saving: q33's single 1500-row batch over 8 partitions spends
+    * 566–840 ms of commitTimeMs on either provider. The crossover is
     * state size vs executor heap: watermark-bounded aggregates /
     * joins / dedup keep per-partition state below heap when the
     * watermark delay is short against the data's time span, so the
@@ -318,16 +322,6 @@ object StreamingQueries extends QueryModule {
       s.conf.set("spark.sql.streaming.stateStore.providerClass", prevProv)
     }
   }
-
-  /** Recursive scratch-dir delete with the walk stream CLOSED (an
-    * unclosed Files.walk leaks a directory handle per call). */
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      finally walk.close()
-    }
 
   /** The events table staged as `nFiles` TIME-ORDERED parquet chunks
     * (total order (ts, event_id), equal-count split, strictly increasing

@@ -490,16 +490,49 @@ class DedupSpec extends SparkSpec {
       Dedup.signatureStore(df, col("doc_id"), col("text"), nPerms)
 
     it("maintained store ≡ full recompute, with exact provenance") {
+      val provenance = Map(1L -> "retained", 2L -> "computed",
+        3L -> "computed", 4L -> "retained")
+      def srcOf(df: org.apache.spark.sql.DataFrame) =
+        df.select("doc_id", "src").distinct().as[(Long, String)].collect().toMap
+      def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame,
+               cols: Seq[String]) = {
+        val (x, y) = (a.select(cols.map(col): _*), b.select(cols.map(col): _*))
+        assert(x.except(y).count() == 0 && y.except(x).count() == 0)
+        assert(x.count() == y.count())
+      }
       val out = Dedup.incrementalSignatures(current, store(prev),
         col("doc_id"), col("text"), nPerms)
-      val full = store(current)
-      val key = (0 until nPerms).map(i => col(s"sig$i"))
-      assert(out.select(col("doc_id") +: col("content_fp") +: key: _*)
-        .except(full.select(col("doc_id") +: col("content_fp") +: key: _*)).count() == 0)
-      assert(out.count() == full.count())
-      val src = out.select("doc_id", "src").as[(Long, String)].collect().toMap
-      assert(src == Map(1L -> "retained", 2L -> "computed",
-        3L -> "computed", 4L -> "retained"))
+      same(out, store(current), Seq("doc_id", "content_fp") ++ (0 until nPerms).map(i => s"sig$i"))
+      assert(srcOf(out) == provenance)
+      // the SimHash store
+      val sh = Dedup.incrementalSimhash(current,
+        Dedup.simhashStore(prev, col("doc_id"), col("text")), col("doc_id"), col("text"))
+      same(sh, Dedup.simhashStore(current, col("doc_id"), col("text")),
+        Seq("doc_id", "content_fp", "simhash"))
+      assert(srcOf(sh) == provenance)
+      // the containment index: every posting ≡ full; computed docs are
+      // flagged under the current df (≡ full), retained docs keep their
+      // stored prefix flags verbatim. Shared shingles make the df matter:
+      // "alpha beta gamma" is doc 3's rarest among the computed docs but
+      // not in the whole corpus (retained 1 and 4 hold it too).
+      val t = 0.9
+      val prevC = Seq((1L, "alpha beta gamma delta epsilon"), (2L, "m n o p q"),
+        (4L, "alpha beta gamma zeta eta"), (9L, "gone gone gone gone gone"))
+        .toDF("doc_id", "text")
+      val curC = Seq((1L, "alpha beta gamma delta epsilon"), (2L, "m n o alpha beta"),
+        (3L, "m n o alpha beta gamma"), (4L, "alpha beta gamma zeta eta"))
+        .toDF("doc_id", "text")
+      val prevIdx = Dedup.containmentIndex(prevC, col("doc_id"), col("text"), t)
+      val idx = Dedup.incrementalContainmentIndex(curC, prevIdx,
+        col("doc_id"), col("text"), t)
+      val fullIdx = Dedup.containmentIndex(curC, col("doc_id"), col("text"), t)
+      same(idx, fullIdx, Seq("doc_id", "content_fp", "sid"))
+      def ofSrc(df: org.apache.spark.sql.DataFrame, src: String) =
+        df.join(idx.filter(col("src") === src).select("doc_id").distinct(), "doc_id")
+      same(ofSrc(idx, "computed"), ofSrc(fullIdx, "computed"), Seq("doc_id", "sid", "pref"))
+      same(ofSrc(idx, "retained"), ofSrc(prevIdx, "retained"),
+        Seq("doc_id", "content_fp", "sid", "pref"))
+      assert(srcOf(idx) == provenance)
     }
 
     it("an unchanged crawl recomputes nothing and drops nothing") {
@@ -809,6 +842,22 @@ class DedupSpec extends SparkSpec {
         prevPairs, mh, bits, maxBucket = 3)
         .as[(Long, Long, Long)].collect().toSet
       assert(checked == Set((1L, 2L, 0L))) // surplus = exactly the survivor
+      // the same invariant for the MinHash family: one band, identical
+      // texts share one bucket, which grows from 2 to 5 over cap 3
+      val (nPerms, rpb) = (4, 4)
+      val txt = "alpha beta gamma delta epsilon"
+      val prevSig = Dedup.signatureStore(Seq((1L, txt), (2L, txt)).toDF("doc_id", "text"),
+        col("doc_id"), col("text"), nPerms)
+      val prevLsh = Dedup.lshCandidates(prevSig, nPerms, rpb, maxBucket = 3)
+      assert(prevLsh.as[(Long, Long)].collect().toSet == Set((1L, 2L)))
+      val sigStore = Dedup.incrementalSignatures(
+        Seq(1L, 2L, 7L, 8L, 9L).map(i => (i, txt)).toDF("doc_id", "text"), prevSig,
+        col("doc_id"), col("text"), nPerms)
+      assert(Dedup.lshCandidates(sigStore, nPerms, rpb, maxBucket = 3).count() == 0)
+      val lsh = Dedup.incrementalLshPairsChecked(prevSig, sigStore, prevLsh,
+        nPerms, rpb, maxBucket = 3)
+        .select("doc_a", "doc_b", "origin").as[(Long, Long, String)].collect().toSet
+      assert(lsh == Set((1L, 2L, "survivor")))
     }
 
     it("restores retained pairs of a crossing bucket that GAINED a computed member") {
