@@ -27,10 +27,10 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // RocksDB-backed streaming state: state lives off-heap/on-disk so
-      // watermark-bounded operators (windows, sessions, dedup) survive
-      // state sizes far beyond executor heap — the 100 TB shape. The
-      // HDFS-default provider keeps every key on-heap.
+      // Session-default state store for streams started outside
+      // StreamingQueries' drains: RocksDB keeps state off-heap/on-disk,
+      // where the HDFS-backed provider keeps every key on-heap. The drains
+      // pick their own provider per query (StreamingQueries.stateProvider).
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // RocksDB commits write a changelog file per store per batch instead

@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+
+import org.apache.spark.sql.DataFrame
 
 /** Source-signature staleness guard for anything STAGED from a testdata
   * file into scratch space (streaming file-source copies, layout
@@ -36,6 +39,23 @@ object Staging {
       build
       record(src, stage)
     }
+
+  /** Write `df` as exactly one `format` file at `dest` with modification
+    * time `mtime`: the file source orders a directory's files by mtime,
+    * so staged batch files replay in a fixed order. The single part is
+    * built in a `_`-prefixed sibling directory, which a file source
+    * never lists, and that directory is removed afterwards. */
+  def writeOneFile(df: DataFrame, dest: Path, mtime: Long, format: String = "parquet"): Unit = {
+    val tmp = dest.resolveSibling(s"_build_${dest.getFileName}")
+    df.coalesce(1).write.mode("overwrite").format(format).save(tmp.toString)
+    val listing = Files.list(tmp)
+    val part =
+      try listing.filter(_.getFileName.toString.startsWith("part-")).findFirst().orElseThrow()
+      finally listing.close()
+    Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(dest, FileTime.fromMillis(mtime))
+    deleteRecursively(tmp)
+  }
 
   /** Recursive delete with the walk stream CLOSED (an unclosed
     * Files.walk leaks a directory handle per call). */

@@ -28,7 +28,8 @@ object StreamProbe {
     val spark = Sessions.local("graft-stream-probe")
     // A/B harness: SPARK_GRAFT_PROBE_CONF="k=v;k=v" applies session confs
     // before any query runs. It cannot switch the state-store provider:
-    // the drains set it per query — use SPARK_GRAFT_STATE_PROVIDER.
+    // the drains derive it per query (StreamingQueries.stateProvider) —
+    // use SPARK_GRAFT_STATE_PROVIDER.
     sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(';').filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
 

@@ -5,8 +5,9 @@ import java.time.Instant
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Staging, Tables}
 import graft.Staging.deleteRecursively
 import graft.functions.Tstamps
 import graft.pipeline._
@@ -796,7 +797,6 @@ object PipelineQueries extends QueryModule {
     * spec double.
     */
   def initialPositions(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.StandardCopyOption
     val work = freshWorkDir("q159", dir)
     val in = Paths.get(work, "in")
     Files.createDirectories(in)
@@ -805,20 +805,11 @@ object PipelineQueries extends QueryModule {
     val ev = Tables(s, dir, "events")
       .select(col("event_id"), pmod(col("event_id"), lit(5L)).cast("int").as("__f"))
       .localCheckpoint()
-    for (c <- 0 until 5) {
-      val tmp = Paths.get(work, s"build_$c")
-      ev.filter(col("__f") === c).select(col("event_id").cast("string").as("value"))
-        .coalesce(1).write.mode("overwrite").text(tmp.toString)
-      val listing = Files.list(tmp)
-      val part =
-        try listing.filter(p => p.getFileName.toString.endsWith(".txt")).findFirst().orElseThrow()
-        finally listing.close()
-      val dest = in.resolve(f"chunk_$c%02d.txt")
-      Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-      deleteRecursively(tmp)
-      Files.setLastModifiedTime(dest, java.nio.file.attribute.FileTime.fromMillis(
-        if (c == 4) futureT else histT0 + c * 60000L))
-    }
+    for (c <- 0 until 5)
+      Staging.writeOneFile(
+        ev.filter(col("__f") === c).select(col("event_id").cast("string").as("value")),
+        in.resolve(f"chunk_$c%02d.txt"), if (c == 4) futureT else histT0 + c * 60000L,
+        format = "text")
     ev.unpersist(blocking = false)
     val positions = Seq(
       "TRIM_HORIZON" -> InitialPosition.TrimHorizon,
@@ -836,14 +827,8 @@ object PipelineQueries extends QueryModule {
           BadOutputConfig(s"$work/bad_$label")),
         buffer = BufferConfig(byteLimit = 256L << 20, recordLimit = 10000, timeLimit = 0),
         monitoring = None)
-      val lines = FileSource.lines(s, config, checkpointDir = None)
-      val name = s"graft_pos_${label.toLowerCase.replace("_", "")}"
-      val q = lines.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).localCheckpoint(true)
+      StreamingQueries.drain(s, FileSource.lines(s, config, checkpointDir = None),
+          OutputMode.Append())
         .select(col("value").cast("long").as("event_id"))
         .groupBy(pmod(col("event_id"), lit(5L)).as("fid"))
         .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_eid"))

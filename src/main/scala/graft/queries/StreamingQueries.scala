@@ -1,10 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import java.nio.file.Paths
 
-import graft.{QueryModule, Tables}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.{QueryModule, Staging, Tables}
 import graft.Staging.deleteRecursively
 import graft.functions.ExactAgg._
 
@@ -17,7 +22,7 @@ case class UserState(n: Long, sumCents: Long, maxValue: Double)
   * the processor handle, with first-class TTL support (TTLConfig.NONE
   * here: the state is user-keyed and bounded by user cardinality; an
   * event-keyed processor would set a TTL to bound state at 100 TB).
-  * Requires the RocksDB state store provider (Sessions.builder).
+  * Requires the RocksDB state store provider (see StreamingQueries.stateProvider).
   */
 class UserStatsProcessor
     extends StatefulProcessor[Long, (Long, Long, Double), (Long, Long, Long, Double)] {
@@ -225,38 +230,32 @@ class TokenBucketProcessor
   * Every stateful operator here is state-bounded: watermarked windows and
   * sessions evict on close, q32's dedup uses dropDuplicatesWithinWatermark
   * (state = keys inside the watermark delay, not all keys ever seen), and
-  * q33's per-user state is bounded by user cardinality. The state store is
-  * RocksDB (Sessions.builder) so state lives off-heap/on-disk at scale
-  * instead of in executor heap.
+  * q33's per-user state is bounded by user cardinality. Every query drains
+  * through [[drainStream]], which picks each query's state-store provider
+  * from its plan ([[stateProvider]]).
   */
 object StreamingQueries extends QueryModule {
 
-  /** Staleness guard now shared engine-wide (graft.Staging, VERDICT r7
-    * #2): staging keyed on bare existence served PRE-REGENERATION
-    * copies after the driver rewrote /root/testdata in place — the
-    * guard compares the SOURCE's size+mtime recorded at stage time. */
-  private[queries] def sourceSig(src: java.nio.file.Path): String =
-    graft.Staging.sourceSig(src)
-  private[queries] def stageStale(src: java.nio.file.Path, stage: java.nio.file.Path): Boolean =
-    graft.Staging.stale(src, stage)
-  private[queries] def recordStaged(src: java.nio.file.Path, stage: java.nio.file.Path): Unit =
-    graft.Staging.record(src, stage)
+  /** A fresh per-run scratch directory under graft_work. */
+  private def scratchDir(prefix: String): java.nio.file.Path =
+    Paths.get(sys.props("java.io.tmpdir"), "graft_work",
+      s"${prefix}_${java.util.UUID.randomUUID().toString.replace("-", "")}")
 
   /** The events table as a file stream (ts normalized like Tables). The
     * streaming file source requires a directory, so the parquet file is
     * staged (copied) into a scratch dir, re-copied whenever the source's
-    * size or mtime changed since the last staging.
+    * size or mtime changed since the last staging ([[graft.Staging]]).
     */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, StandardCopyOption}
     val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val stage = Paths.get(sys.props("java.io.tmpdir"), "graft_work", s"stream_$tag")
     Files.createDirectories(stage)
     val src = Paths.get(dir, "events.parquet")
     val dest = stage.resolve("events.parquet")
-    if (stageStale(src, stage)) {
+    if (Staging.stale(src, stage)) {
       Files.copy(src, dest, StandardCopyOption.REPLACE_EXISTING)
-      recordStaged(src, stage)
+      Staging.record(src, stage)
     }
     val raw = s.read.parquet(dest.toString) // schema probe
     Tables.normalizeTs(
@@ -273,31 +272,6 @@ object StreamingQueries extends QueryModule {
   private val StreamShufflePartitions: String =
     sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8")
 
-  /** Per-query state-store provider selection (VERDICT r16 #3: "the
-    * RocksDB/HDFS-store choice per query is a legitimate engine
-    * decision — pick per measured crossover"). Measured r17
-    * (StreamProbe at sf0.1) on the multi-batch drains q132, q215 and
-    * q180: there a RocksDB commit costs snapshot + zip + one fsync PER
-    * FILE per store per batch (q132's 4-store join: 52s of summed
-    * commit latency, ~85% in
-    * rocksdbCommitFileSyncLatencyMs/SaveZipFiles), and the same drains
-    * ran faster on the HDFS-backed provider (q132 13.1s -> 8.6s,
-    * q215 5.5s -> 4.0s, q180 4.8s -> 3.8s wall). That is not a general
-    * saving: q33's single 1500-row batch over 8 partitions spends
-    * 566–840 ms of commitTimeMs on either provider. The crossover is
-    * state size vs executor heap: watermark-bounded aggregates /
-    * joins / dedup keep per-partition state below heap when the
-    * watermark delay is short against the data's time span, so the
-    * engine default for those is the HDFS-backed provider. A long
-    * delay is no bound: q32's 45-day dedup watermark spans the whole
-    * events corpus, so its on-heap state holds every distinct key
-    * (it stays on the default provider for now). A deployment whose
-    * per-partition state exceeds heap sets
-    * SPARK_GRAFT_STATE_PROVIDER=rocksdb. The state API v2 queries
-    * (transformWithState) require RocksDB regardless (Spark 4
-    * constraint) and keep it — with changelog checkpointing
-    * (Sessions) their commits are one changelog file too.
-    */
   private val StateProviderKnob: String =
     sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER", "hdfs")
   private val RocksProvider =
@@ -305,22 +279,71 @@ object StreamingQueries extends QueryModule {
   private val HdfsProvider =
     "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 
-  /** Shared drain configuration: the per-query shuffle/state partition
-    * count and the per-query state-store provider, set around the
-    * stream start and restored after (both are read at query start).
-    * `tws = true` marks a transformWithState query — those must run on
-    * RocksDB. */
-  private def withDrainConf[T](s: SparkSession, tws: Boolean = false)(body: => T): T = {
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = s.conf.get("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      if (tws || StateProviderKnob == "rocksdb") RocksProvider else HdfsProvider)
-    try body
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", prevProv)
-    }
+  /** The state-store provider a drain of `streamDf` runs on, read from
+    * its analyzed plan. This is the one place the rule lives:
+    *  - RocksDB when the plan holds a `TransformWithState` node (the
+    *    state API v2 runs only on RocksDB in Spark 4; with changelog
+    *    checkpointing, see Sessions, its commits are one changelog file)
+    *    or when SPARK_GRAFT_STATE_PROVIDER=rocksdb;
+    *  - the HDFS-backed provider otherwise.
+    *
+    * Why HDFS for the rest (VERDICT r16 #3: pick per measured
+    * crossover): measured r17 (StreamProbe at sf0.1) on the multi-batch
+    * drains q132, q215 and q180, a RocksDB commit costs snapshot + zip +
+    * one fsync PER FILE per store per batch (q132's 4-store join: 52s of
+    * summed commit latency, ~85% in
+    * rocksdbCommitFileSyncLatencyMs/SaveZipFiles), and the same drains
+    * ran faster on the HDFS-backed provider (q132 13.1s -> 8.6s,
+    * q215 5.5s -> 4.0s, q180 4.8s -> 3.8s wall). That is not a general
+    * saving: q33's single 1500-row batch over 8 partitions spends
+    * 566–840 ms of commitTimeMs on either provider. The crossover is
+    * state size vs executor heap: watermark-bounded aggregates / joins /
+    * dedup keep per-partition state below heap when the watermark delay
+    * is short against the data's time span. A long delay is no bound:
+    * q32's 45-day dedup watermark spans the whole events corpus, so its
+    * on-heap state holds every distinct key (it stays on HDFS for now).
+    * A deployment whose per-partition state exceeds heap sets
+    * SPARK_GRAFT_STATE_PROVIDER=rocksdb.
+    */
+  private[queries] def stateProvider(streamDf: DataFrame): String =
+    if (StateProviderKnob == "rocksdb" ||
+        streamDf.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
+      RocksProvider
+    else HdfsProvider
+
+  /** The one drain path of every streaming query here: start `streamDf`
+    * under `Trigger.AvailableNow` into the sink `sink` configures
+    * (optionally on a durable `checkpoint`), await it, and restore the
+    * session conf. The shuffle/state partition count and the
+    * [[stateProvider]] are set only around the start — a streaming query
+    * reads both when it starts. */
+  private def drainStream(s: SparkSession, streamDf: DataFrame, mode: OutputMode,
+      checkpoint: Option[String] = None)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val conf = Seq("spark.sql.shuffle.partitions" -> StreamShufflePartitions,
+      "spark.sql.streaming.stateStore.providerClass" -> stateProvider(streamDf))
+    val prev = conf.map { case (k, _) => k -> s.conf.get(k) }
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    try {
+      val w = sink(streamDf.writeStream.outputMode(mode).trigger(Trigger.AvailableNow()))
+      checkpoint.fold(w)(w.option("checkpointLocation", _)).start().awaitTermination()
+    } finally prev.foreach { case (k, v) => s.conf.set(k, v) }
+  }
+
+  /** A [[drainStream]] sink that hands every micro-batch to `f`. Typed as
+    * a Scala function, so a caller's lambda needs neither parameter types
+    * nor a trailing `()` to pick between `foreachBatch`'s overloads. */
+  private def eachBatch(f: (DataFrame, Long) => Unit): DataStreamWriter[Row] => DataStreamWriter[Row] =
+    _.foreachBatch(f)
+
+  /** Run a streaming frame to completion into a memory sink, return the
+    * collected result detached from the stream and its temp view. */
+  private[queries] def drain(s: SparkSession, streamDf: DataFrame, mode: OutputMode): DataFrame = {
+    val name = s"graft_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    drainStream(s, streamDf, mode)(_.format("memory").queryName(name))
+    val out = s.table(name).localCheckpoint(true)
+    s.catalog.dropTempView(name)
+    out
   }
 
   /** The events table staged as `nFiles` TIME-ORDERED parquet chunks
@@ -341,14 +364,27 @@ object StreamingQueries extends QueryModule {
     */
   private val chunkStaged = collection.mutable.Set.empty[(String, String, Int)]
 
+  /** Stage chunk `c` of a frame carrying an `__f` chunk column as the
+    * one parquet file `chunk_cc.parquet` in `stage`, with an mtime that
+    * increases with `c`: the file source's batch order is modification-
+    * time order, so batch i == chunk i under maxFilesPerTrigger=1. */
+  private def writeChunk(chunked: DataFrame, stage: java.nio.file.Path, c: Int): Unit =
+    Staging.writeOneFile(chunked.filter(col("__f") === c).drop("__rn", "__f"),
+      stage.resolve(f"chunk_$c%02d.parquet"), 1600000000000L + c * 60000L)
+
+  /** The chunk files in `stage` as a stream of `filesPerTrigger` files
+    * per micro-batch. */
+  private def chunkFileStream(s: SparkSession, schema: StructType, stage: java.nio.file.Path,
+      filesPerTrigger: Int = 1): DataFrame =
+    Tables.normalizeTs(s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(stage.toString))
+
   /** Shared chunk stager: `assign` adds an `__f` chunk column (0 until
-    * nFiles); chunks are written as one parquet file each with strictly
-    * increasing mtimes so batch i == chunk i under maxFilesPerTrigger=1. */
+    * nFiles), and every chunk is staged by [[writeChunk]]. */
   private def stagedChunkStream(s: SparkSession, dir: String, nFiles: Int,
       variant: String, prefix: String,
       assign: (DataFrame, Long) => DataFrame,
       filesPerTrigger: Int = 1): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val stage = Paths.get(sys.props("java.io.tmpdir"), "graft_work", s"${prefix}_${nFiles}_$tag")
     val src = Paths.get(dir, "events.parquet")
@@ -356,44 +392,25 @@ object StreamingQueries extends QueryModule {
     chunkStaged.synchronized {
       // Rebuild when this JVM hasn't staged yet AND the on-disk staging
       // (possibly from a previous JVM) doesn't match the current source.
-      if (!chunkStaged((dir, variant, nFiles)) && stageStale(src, stage)) {
-        deleteRecursively(stage)
-        Files.createDirectories(stage)
-        val n = raw.count()
-        val chunked = assign(raw, n).localCheckpoint()
-        for (c <- 0 until nFiles) {
-          val tmp = stage.resolve(s"build_$c")
-          chunked.filter(col("__f") === c).drop("__rn", "__f")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val listing = Files.list(tmp)
-          val part =
-            try listing.filter(p => p.getFileName.toString.endsWith(".parquet")).findFirst().orElseThrow()
-            finally listing.close()
-          val destFile = stage.resolve(f"chunk_$c%02d.parquet")
-          Files.move(part, destFile, StandardCopyOption.REPLACE_EXISTING)
-          deleteRecursively(tmp)
-          // distinct, increasing mtimes: the file source's batch order is
-          // modification-time order, so batch i == chunk i, deterministically
-          Files.setLastModifiedTime(destFile,
-            java.nio.file.attribute.FileTime.fromMillis(1600000000000L + c * 60000L))
-        }
+      if (!chunkStaged((dir, variant, nFiles))) Staging.ensureFresh(src, stage) {
+        val chunked = assign(raw, raw.count()).localCheckpoint()
+        for (c <- 0 until nFiles) writeChunk(chunked, stage, c)
         chunked.unpersist(blocking = false)
-        recordStaged(src, stage)
       }
       chunkStaged += ((dir, variant, nFiles))
     }
-    Tables.normalizeTs(
-      s.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", filesPerTrigger.toString).parquet(stage.toString))
+    chunkFileStream(s, raw.schema, stage, filesPerTrigger)
   }
+
+  /** The (ts, event_id)-ordered chunk assignment of
+    * [[eventsChunkedStream]] over a frame of `n` rows. */
+  private def timeChunks(nFiles: Int)(raw: DataFrame, n: Long): DataFrame =
+    raw.withColumn("__rn", row_number().over(Window.orderBy(col("ts"), col("event_id"))) - 1)
+      .withColumn("__f", expr(s"CAST((CAST(__rn AS BIGINT) * $nFiles) DIV ${n}L AS INT)"))
 
   private def eventsChunkedStream(s: SparkSession, dir: String, nFiles: Int,
                                   filesPerTrigger: Int = 1): DataFrame =
-    stagedChunkStream(s, dir, nFiles, "time", "chunkstream", (raw, n) => {
-      val w = org.apache.spark.sql.expressions.Window.orderBy(col("ts"), col("event_id"))
-      raw.withColumn("__rn", row_number().over(w) - 1)
-        .withColumn("__f", expr(s"CAST((CAST(__rn AS BIGINT) * $nFiles) DIV ${n}L AS INT)"))
-    }, filesPerTrigger)
+    stagedChunkStream(s, dir, nFiles, "time", "chunkstream", timeChunks(nFiles), filesPerTrigger)
 
   /** The events table staged as `nFiles` chunks by `event_id mod n` —
     * deliberately OUT of time order, so every micro-batch after the
@@ -405,9 +422,18 @@ object StreamingQueries extends QueryModule {
     stagedChunkStream(s, dir, nFiles, "mod", "modchunkstream", (raw, _) =>
       raw.withColumn("__f", pmod(col("event_id"), lit(nFiles)).cast("int")))
 
-  /** The events table staged as 5 KEY-LOCAL chunks — the realistic CDC
-    * arrival shape where an update batch concentrates on a bounded key
-    * region instead of spraying the whole key space: with user residue
+  /** Chunk count of [[eventsUserChunkedStream]] — the ONE constant the
+    * user-keyed chunk assignment ([[userChunks]]), q309's as-of
+    * version list, and q309/q312's oracle replays all derive from, so
+    * a chunking change fails at the require in [[cdcTimeTravel]]
+    * (pointing at this constant) instead of as a confusing oracle
+    * hash mismatch. */
+  private val UserChunks = 5
+
+  /** The key-local chunk assignment of [[eventsUserChunkedStream]]: 5
+    * KEY-LOCAL chunks, the realistic CDC arrival shape where an update
+    * batch concentrates on a bounded key region instead of spraying the
+    * whole key space: with user residue
     * r = user_id mod 15, chunk i carries residues {3i, 3i+1, 3i+2},
     * plus (for r ≡ 0 mod 3, odd event_id) a SPILL of residue 3(i+1 mod 5)
     * rows — so under a 15-bucket `user_id mod 15` snapshot layout every
@@ -415,21 +441,25 @@ object StreamingQueries extends QueryModule {
     * merge), while the spill users' events straddle two batches, making
     * later merges genuinely REPLACE keys rather than only insert them.
     * Pure integer arithmetic both engines replicate. */
-  /** Chunk count of [[eventsUserChunkedStream]] — the ONE constant the
-    * user-keyed chunk assignment (`% UserChunks` below), q309's as-of
-    * version list, and q309/q312's oracle replays all derive from, so
-    * a chunking change fails at the require in [[cdcTimeTravel]]
-    * (pointing at this constant) instead of as a confusing oracle
-    * hash mismatch. */
-  private val UserChunks = 5
+  private def userChunks(raw: DataFrame): DataFrame =
+    raw.withColumn("__f", expr(
+      s"""CAST(CASE WHEN pmod(user_id, 15) % 3 != 0 THEN pmod(user_id, 15) DIV 3
+         |          WHEN event_id % 2 = 0 THEN pmod(user_id, 15) DIV 3
+         |          ELSE (pmod(user_id, 15) DIV 3 + ${UserChunks - 1})
+         |               % $UserChunks END AS INT)""".stripMargin))
 
   private def eventsUserChunkedStream(s: SparkSession, dir: String): DataFrame =
-    stagedChunkStream(s, dir, UserChunks, "user", "userchunkstream", (raw, _) =>
-      raw.withColumn("__f", expr(
-        s"""CAST(CASE WHEN pmod(user_id, 15) % 3 != 0 THEN pmod(user_id, 15) DIV 3
-           |          WHEN event_id % 2 = 0 THEN pmod(user_id, 15) DIV 3
-           |          ELSE (pmod(user_id, 15) DIV 3 + ${UserChunks - 1})
-           |               % $UserChunks END AS INT)""".stripMargin)))
+    stagedChunkStream(s, dir, UserChunks, "user", "userchunkstream", (raw, _) => userChunks(raw))
+
+  /** One winner per user in a CDC micro-batch: its (ts, event_id)-latest
+    * row. Checkpointed eagerly, once: the emptiness probe and the merge
+    * write that follow would otherwise each re-run the window sort (a
+    * batch is bounded by its chunk size). */
+  private def latestPerUser(df: DataFrame): DataFrame =
+    df.withColumn("__rn", row_number().over(Window.partitionBy(col("user_id"))
+        .orderBy(col("ts").desc, col("event_id").desc)))
+      .filter(col("__rn") === 1).drop("__rn")
+      .localCheckpoint(true)
 
   /** Drain a chunked stream one micro-batch at a time, tagging every
     * emitted row with the micro-batch id that produced it (`emit_batch`)
@@ -439,32 +469,20 @@ object StreamingQueries extends QueryModule {
     * each batch's rows to a scratch parquet dir; payload rows stay on
     * executors.
     */
-  private def drainBatches(s: SparkSession, streamDf: DataFrame, mode: OutputMode,
-                           tws: Boolean = false): DataFrame = {
-    import java.nio.file.Paths
-    val out = Paths.get(sys.props("java.io.tmpdir"), "graft_work",
-      s"mb_out_${java.util.UUID.randomUUID().toString.replace("-", "")}")
-    withDrainConf(s, tws) {
-      val q = streamDf.writeStream
-        .foreachBatch { (df: DataFrame, id: Long) =>
-          df.withColumn("emit_batch", lit(id)).write.mode("append").parquet(out.toString)
-          ()
-        }
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+  private def drainBatches(s: SparkSession, streamDf: DataFrame, mode: OutputMode): DataFrame = {
+    val out = scratchDir("mb_out")
+    drainStream(s, streamDf, mode)(eachBatch { (df, id) =>
+      df.withColumn("emit_batch", lit(id)).write.mode("append").parquet(out.toString)
+    })
     // zero emitted rows (legitimate: e.g. no window ever closes) never
     // creates the output dir — that is an EMPTY result, not an error
     val res =
       if (java.nio.file.Files.exists(out))
         s.read.parquet(out.toString).localCheckpoint(true)
       else {
-        val schema = org.apache.spark.sql.types.StructType(
-          streamDf.schema :+ org.apache.spark.sql.types.StructField(
-            "emit_batch", org.apache.spark.sql.types.LongType, nullable = false))
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        val schema = StructType(streamDf.schema :+
+          StructField("emit_batch", LongType, nullable = false))
+        s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
       }
     deleteRecursively(out)
     res
@@ -482,25 +500,6 @@ object StreamingQueries extends QueryModule {
        |        // (SELECT COUNT(*) FROM events) AS INT) AS f FROM events),
        |fmax AS (SELECT f, max(ts) AS mx FROM ev GROUP BY f),
        |wm AS (SELECT f, max(mx) OVER (ORDER BY f) AS cmx FROM fmax)""".stripMargin
-
-  /** Run a streaming frame to completion into a memory sink, return the
-    * collected result detached from the stream. */
-  private def drain(s: SparkSession, streamDf: DataFrame, mode: OutputMode,
-                    tws: Boolean = false): DataFrame = {
-    val name = s"graft_mem_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    withDrainConf(s, tws) {
-      val q = streamDf.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val out = s.table(name).localCheckpoint(true)
-    s.catalog.dropTempView(name)
-    out
-  }
 
   // ---- q30: event-time tumbling window + watermark ---------------------
 
@@ -998,41 +997,23 @@ object StreamingQueries extends QueryModule {
     * The oracle replays exactly that argmax.
     */
   def cdcApply(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Paths
-    val scratch = Paths.get(sys.props("java.io.tmpdir"), "graft_work",
-      s"cdc_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val scratch = scratchDir("cdc")
     val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
     val updates = eventsModChunkedStream(s, dir, 5)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    withDrainConf(s) {
-      val q = updates.writeStream
-        .foreachBatch { (df: DataFrame, id: Long) =>
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"))
-            .orderBy(col("ts").desc, col("event_id").desc)
-          // materialize the per-batch winners ONCE: the isEmpty probe and
-          // the merge write would otherwise each re-run the window sort
-          // (eager checkpoint — a batch is bounded by the chunk size)
-          val winners = df.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-            .localCheckpoint(true)
-          if (!winners.isEmpty) {
-            val out = scratch.resolve(s"v$id").toString
-            val merged = Option(latest.get()) match {
-              case None => winners
-              case Some(p) =>
-                graft.operators.Layout.upsert(s.read.parquet(p), winners, Seq("user_id"))
-            }
-            merged.write.mode("overwrite").parquet(out)
-            latest.set(out)
-          }
-          ()
+    drainStream(s, updates, OutputMode.Append())(eachBatch { (df, id) =>
+      val winners = latestPerUser(df)
+      if (!winners.isEmpty) {
+        val out = scratch.resolve(s"v$id").toString
+        val merged = Option(latest.get()) match {
+          case None => winners
+          case Some(p) =>
+            graft.operators.Layout.upsert(s.read.parquet(p), winners, Seq("user_id"))
         }
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+        merged.write.mode("overwrite").parquet(out)
+        latest.set(out)
+      }
+    })
     // materialize the result OFF the scratch dir, then reclaim it —
     // repeated verify/bench runs must not accumulate tmp snapshots
     val res = s.read.parquet(latest.get()).orderBy(col("user_id")).localCheckpoint(true)
@@ -1062,51 +1043,34 @@ object StreamingQueries extends QueryModule {
     * with the key-local chunk assignment).
     */
   def cdcApplyPartitioned(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Paths
     import graft.operators.Layout
-    val scratch = Paths.get(sys.props("java.io.tmpdir"), "graft_work",
-      s"cdcp_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val scratch = scratchDir("cdcp")
     val snap = scratch.resolve("snapshot").toString
     val bucketExpr = pmod(col("user_id"), lit(15L))
     val initialized = new java.util.concurrent.atomic.AtomicBoolean(false)
     val updates = eventsUserChunkedStream(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    withDrainConf(s) {
-      val q = updates.writeStream
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"))
-            .orderBy(col("ts").desc, col("event_id").desc)
-          // same one-shot winners materialization as cdcApply: isEmpty +
-          // bucketed write/merge must not re-run the window per consumer
-          val winners = df.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-            .localCheckpoint(true)
-          if (!winners.isEmpty) {
-            if (!initialized.getAndSet(true)) {
-              Layout.writeBucketed(winners, snap, bucketExpr)
-            } else {
-              val before = Layout.bucketFileSignatures(s, snap)
-              val touched = Layout.upsertPartitioned(
-                s, snap, winners, Seq("user_id"), bucketExpr).toSet
-              val after = Layout.bucketFileSignatures(s, snap)
-              val untouched = before.keySet.diff(touched)
-              require(untouched.nonEmpty,
-                "cdcApplyPartitioned audit is vacuous: every bucket touched")
-              untouched.foreach { b =>
-                require(before(b) == after(b),
-                  s"cdcApplyPartitioned: untouched bucket $b was rewritten " +
-                    s"(before=${before(b)}, after=${after(b)})")
-              }
-            }
+    drainStream(s, updates, OutputMode.Append())(eachBatch { (df, _) =>
+      val winners = latestPerUser(df)
+      if (!winners.isEmpty) {
+        if (!initialized.getAndSet(true)) {
+          Layout.writeBucketed(winners, snap, bucketExpr)
+        } else {
+          val before = Layout.bucketFileSignatures(s, snap)
+          val touched = Layout.upsertPartitioned(
+            s, snap, winners, Seq("user_id"), bucketExpr).toSet
+          val after = Layout.bucketFileSignatures(s, snap)
+          val untouched = before.keySet.diff(touched)
+          require(untouched.nonEmpty,
+            "cdcApplyPartitioned audit is vacuous: every bucket touched")
+          untouched.foreach { b =>
+            require(before(b) == after(b),
+              s"cdcApplyPartitioned: untouched bucket $b was rewritten " +
+                s"(before=${before(b)}, after=${after(b)})")
           }
-          ()
         }
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+      }
+    })
     val res = s.read.parquet(snap)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .orderBy(col("user_id"))
@@ -1139,40 +1103,22 @@ object StreamingQueries extends QueryModule {
     * path). */
   private def versionedEventStore(
       s: SparkSession, dir: String): (java.nio.file.Path, String) = {
-    import java.nio.file.Paths
     import graft.operators.Layout
-    val scratch = Paths.get(sys.props("java.io.tmpdir"), "graft_work",
-      s"cdctt_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val scratch = scratchDir("cdctt")
     val snap = scratch.resolve("snapshot").toString
     val bucketExpr = pmod(col("user_id"), lit(15L))
     val updates = eventsUserChunkedStream(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    withDrainConf(s) {
-      val q = updates.writeStream
-        .foreachBatch { (df: DataFrame, id: Long) =>
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"))
-            .orderBy(col("ts").desc, col("event_id").desc)
-          // one-shot winners materialization: the emptiness probe,
-          // upsertVersioned's touched-bucket distinct, and its merge
-          // write would otherwise each re-run the window sort
-          val winners = df.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-            .localCheckpoint(true)
-          // every chunk is non-empty by construction; an empty batch
-          // would shift version numbering vs the oracle — fail loudly
-          require(!winners.isEmpty, s"versionedEventStore: empty micro-batch $id")
-          val v = Layout.upsertVersioned(s, snap, winners,
-            Seq("user_id"), bucketExpr)
-          require(v == id + 1,
-            s"versionedEventStore: batch $id committed version $v, expected ${id + 1}")
-          ()
-        }
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drainStream(s, updates, OutputMode.Append())(eachBatch { (df, id) =>
+      val winners = latestPerUser(df)
+      // every chunk is non-empty by construction; an empty batch
+      // would shift version numbering vs the oracle — fail loudly
+      require(!winners.isEmpty, s"versionedEventStore: empty micro-batch $id")
+      val v = Layout.upsertVersioned(s, snap, winners,
+        Seq("user_id"), bucketExpr)
+      require(v == id + 1,
+        s"versionedEventStore: batch $id committed version $v, expected ${id + 1}")
+    })
     (scratch, snap)
   }
 
@@ -1388,36 +1334,19 @@ object StreamingQueries extends QueryModule {
     * table — the shared oracle IS that statement.
     */
   def cdcApplyMor(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Paths
-    val scratch = Paths.get(sys.props("java.io.tmpdir"), "graft_work",
-      s"cdcmor_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val scratch = scratchDir("cdcmor")
     val delta = scratch.resolve("delta").toString
     val updates = eventsUserChunkedStream(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    withDrainConf(s) {
-      val q = updates.writeStream
-        .foreachBatch { (df: DataFrame, id: Long) =>
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"))
-            .orderBy(col("ts").desc, col("event_id").desc)
-          // one-shot winners materialization (see cdcApply): the isEmpty
-          // probe and the delta append must not re-run the window sort
-          val winners = df.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-            .localCheckpoint(true)
-          if (!winners.isEmpty)
-            winners.withColumn("__b", lit(id))
-              .write.mode("append").parquet(delta) // O(batch): append-only
-          ()
-        }
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drainStream(s, updates, OutputMode.Append())(eachBatch { (df, id) =>
+      val winners = latestPerUser(df)
+      if (!winners.isEmpty)
+        winners.withColumn("__b", lit(id))
+          .write.mode("append").parquet(delta) // O(batch): append-only
+    })
     // read-time merge: latest-wins per key over all delta generations
     def latestWins(df: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
+      val w = Window
         .partitionBy(col("user_id"))
         .orderBy(col("__b").desc, col("ts").desc, col("event_id").desc)
       df.withColumn("__rn", row_number().over(w))
@@ -1454,7 +1383,7 @@ object StreamingQueries extends QueryModule {
     * be invisible in the data.
     */
   def cdcResume(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.Files
     import graft.operators.Layout
     val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val work = Paths.get(sys.props("java.io.tmpdir"), "graft_work", s"q174_$tag")
@@ -1466,72 +1395,38 @@ object StreamingQueries extends QueryModule {
     val raw = s.read.parquet(Paths.get(dir, "events.parquet").toString)
     val bucketExpr = pmod(col("user_id"), lit(15L))
     // the q157 key-local chunk assignment, staged PROGRESSIVELY
-    val chunked = raw.withColumn("__f", expr(
-        """CAST(CASE WHEN pmod(user_id, 15) % 3 != 0 THEN pmod(user_id, 15) DIV 3
-          |          WHEN event_id % 2 = 0 THEN pmod(user_id, 15) DIV 3
-          |          ELSE (pmod(user_id, 15) DIV 3 + 4) % 5 END AS INT)""".stripMargin))
-      .localCheckpoint()
-    def writeChunk(c: Int): Unit = {
-      val tmp = stage.resolve(s"build_$c")
-      chunked.filter(col("__f") === c).drop("__f")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      val part =
-        try listing.filter(p => p.getFileName.toString.endsWith(".parquet")).findFirst().orElseThrow()
-        finally listing.close()
-      val destFile = stage.resolve(f"chunk_$c%02d.parquet")
-      Files.move(part, destFile, StandardCopyOption.REPLACE_EXISTING)
-      deleteRecursively(tmp)
-      Files.setLastModifiedTime(destFile,
-        java.nio.file.attribute.FileTime.fromMillis(1600000000000L + c * 60000L))
-    }
+    val chunked = userChunks(raw).localCheckpoint()
 
     def drainWave(): Int = {
       val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-      val updates = Tables.normalizeTs(s.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage.toString))
+      val updates = chunkFileStream(s, raw.schema, stage)
         .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      withDrainConf(s) {
-        val q = updates.writeStream
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            batches.incrementAndGet()
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("user_id"))
-              .orderBy(col("ts").desc, col("event_id").desc)
-            // one-shot winners materialization (see cdcApply): isEmpty +
-            // the bucketed write/merge must not re-run the window sort
-            val winners = df.withColumn("__rn", row_number().over(w))
-              .filter(col("__rn") === 1).drop("__rn")
-              .localCheckpoint(true)
-            if (!winners.isEmpty) {
-              // restart-safe init test: the snapshot directory IS the state
-              if (!Files.exists(Paths.get(snap))) {
-                Layout.writeBucketed(winners, snap, bucketExpr)
-              } else {
-                val before = Layout.bucketFileSignatures(s, snap)
-                val touched = Layout.upsertPartitioned(
-                  s, snap, winners, Seq("user_id"), bucketExpr).toSet
-                val after = Layout.bucketFileSignatures(s, snap)
-                (before.keySet.diff(touched)).foreach { b =>
-                  require(before(b) == after(b),
-                    s"cdcResume: untouched bucket $b was rewritten")
-                }
+      drainStream(s, updates, OutputMode.Append(), Some(work.resolve("ckpt").toString))(
+        eachBatch { (df, _) =>
+          batches.incrementAndGet()
+          val winners = latestPerUser(df)
+          if (!winners.isEmpty) {
+            // restart-safe init test: the snapshot directory IS the state
+            if (!Files.exists(Paths.get(snap))) {
+              Layout.writeBucketed(winners, snap, bucketExpr)
+            } else {
+              val before = Layout.bucketFileSignatures(s, snap)
+              val touched = Layout.upsertPartitioned(
+                s, snap, winners, Seq("user_id"), bucketExpr).toSet
+              val after = Layout.bucketFileSignatures(s, snap)
+              (before.keySet.diff(touched)).foreach { b =>
+                require(before(b) == after(b),
+                  s"cdcResume: untouched bucket $b was rewritten")
               }
             }
-            ()
           }
-          .outputMode(OutputMode.Append())
-          .option("checkpointLocation", work.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+        })
       batches.get()
     }
 
-    writeChunk(0); writeChunk(1); writeChunk(2)
+    (0 to 2).foreach(writeChunk(chunked, stage, _))
     drainWave() // wave 1: three merges, then the query STOPS
-    writeChunk(3); writeChunk(4)
+    (3 to 4).foreach(writeChunk(chunked, stage, _))
     val wave2 = drainWave() // resume from checkpoint: the two new files
     require(wave2 == 2,
       s"cdcResume: resumed drain ran $wave2 batches, expected exactly 2 " +
@@ -1549,7 +1444,7 @@ object StreamingQueries extends QueryModule {
 
   /** Spark 4's state data source — the ops/debugging door into a live
     * checkpoint: after an append-mode windowed drain, `format
-    * ("statestore")` reads the aggregation operator's RocksDB state
+    * ("statestore")` reads the aggregation operator's state
     * directly from the checkpoint, and the rows it returns must BE the
     * not-yet-emitted windows — exactly the complement, under the final
     * watermark, of what the sink received. The oracle recomputes those
@@ -1560,7 +1455,6 @@ object StreamingQueries extends QueryModule {
     * eviction left exactly the right state behind.
     */
   def stateReader(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Paths
     val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val work = Paths.get(sys.props("java.io.tmpdir"), "graft_work", s"q180_$tag")
     deleteRecursively(work)
@@ -1569,22 +1463,17 @@ object StreamingQueries extends QueryModule {
       .withWatermark("ts", "2 days")
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-    // the statestore read must materialize under the SAME provider conf
-    // that wrote the checkpoint — keep it inside the drain-conf scope
-    val res = withDrainConf(s) {
-      val q = windows.writeStream
-        .foreachBatch { (df: DataFrame, _: Long) => df.write.format("noop").mode("overwrite").save(); () }
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", work.resolve("ckpt").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.format("statestore").load(work.resolve("ckpt").toString)
-        .select(col("key.window.start").as("day"), col("key.event_type").as("event_type"),
-          col("value.count").as("n"), col("value.sum").cast("double").as("sum_value"))
-        .orderBy(col("day"), col("event_type"))
-        .localCheckpoint(true)
-    }
+    val ckpt = work.resolve("ckpt").toString
+    drainStream(s, windows, OutputMode.Append(), Some(ckpt))(
+      eachBatch { (df, _) => df.write.format("noop").mode("overwrite").save() })
+    // the statestore reader takes the provider (and every other state
+    // conf) from the checkpoint's offset log, so it reads the state back
+    // through the provider that wrote it, whatever the session default
+    val res = s.read.format("statestore").load(ckpt)
+      .select(col("key.window.start").as("day"), col("key.event_type").as("event_type"),
+        col("value.count").as("n"), col("value.sum").cast("double").as("sum_value"))
+      .orderBy(col("day"), col("event_type"))
+      .localCheckpoint(true)
     deleteRecursively(work)
     res
   }
@@ -1683,32 +1572,22 @@ object StreamingQueries extends QueryModule {
     * a planted-duplicates file (every doc_id≡0 (mod 3) re-added under a
     * shifted id, like q21) staged once per sfDir. */
   private def docsStream(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, StandardCopyOption}
     val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val stage = Paths.get(sys.props("java.io.tmpdir"), "graft_work", s"docstream_$tag")
     val dest = stage.resolve("documents.parquet")
-    val dups = stage.resolve("dups.parquet")
     // restaged on EVERY call (cheap: one copy + one small write), never
     // reused from a previous run — an exists-check here would silently
-    // serve stale planted duplicates if the corpus under `dir` changed
-    locally {
-      Files.createDirectories(stage)
-      Files.copy(Paths.get(dir, "documents.parquet"), dest, StandardCopyOption.REPLACE_EXISTING)
-      val tmp = stage.resolve("dups_build")
+    // serve stale planted duplicates if the corpus under `dir` changed.
+    // Both files land in the one first micro-batch, so their mtimes
+    // only need to be recent, as a fresh copy's is.
+    Files.createDirectories(stage)
+    Files.copy(Paths.get(dir, "documents.parquet"), dest, StandardCopyOption.REPLACE_EXISTING)
+    Staging.writeOneFile(
       Tables(s, dir, "documents")
         .filter(col("doc_id") % 3 === 0)
-        .withColumn("doc_id", col("doc_id") + 1000000L)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      val part =
-        try listing.filter(p => p.getFileName.toString.endsWith(".parquet")).findFirst().orElseThrow()
-        finally listing.close()
-      Files.move(part, dups, StandardCopyOption.REPLACE_EXISTING)
-      // clean the scratch write dir so the stream dir holds exactly two
-      // files (walk-stream closed inside the helper)
-      deleteRecursively(tmp)
-    }
+        .withColumn("doc_id", col("doc_id") + 1000000L),
+      stage.resolve("dups.parquet"), System.currentTimeMillis())
     val schema = s.read.parquet(dest.toString).schema
     s.readStream.schema(schema).parquet(stage.toString)
   }
@@ -1773,7 +1652,7 @@ object StreamingQueries extends QueryModule {
     * log), and eviction timing is unchanged by the restart.
     */
   def mbResumeWindow(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.Files
     val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val work = Paths.get(sys.props("java.io.tmpdir"), "graft_work", s"q90_$tag")
     deleteRecursively(work)
@@ -1782,53 +1661,25 @@ object StreamingQueries extends QueryModule {
     Files.createDirectories(stage)
 
     val raw = s.read.parquet(Paths.get(dir, "events.parquet").toString)
-    val n = raw.count()
     // same 4-chunk (ts, event_id) split as eventsChunkedStream, staged
     // PROGRESSIVELY (two files per wave) — the memoized all-at-once
     // staging can't model files arriving between drains
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("ts"), col("event_id"))
-    val chunked = raw
-      .withColumn("__rn", row_number().over(w) - 1)
-      .withColumn("__f", expr(s"CAST((CAST(__rn AS BIGINT) * 4) DIV ${n}L AS INT)"))
-      .localCheckpoint()
-    def writeChunk(c: Int): Unit = {
-      val tmp = stage.resolve(s"build_$c")
-      chunked.filter(col("__f") === c).drop("__rn", "__f")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      val part =
-        try listing.filter(p => p.getFileName.toString.endsWith(".parquet")).findFirst().orElseThrow()
-        finally listing.close()
-      val destFile = stage.resolve(f"chunk_$c%02d.parquet")
-      Files.move(part, destFile, StandardCopyOption.REPLACE_EXISTING)
-      deleteRecursively(tmp)
-      Files.setLastModifiedTime(destFile,
-        java.nio.file.attribute.FileTime.fromMillis(1600000000000L + c * 60000L))
-    }
+    val chunked = timeChunks(4)(raw, raw.count()).localCheckpoint()
 
     def drainWave(wave: Long): Unit = {
-      val windows = Tables.normalizeTs(s.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage.toString))
+      val windows = chunkFileStream(s, raw.schema, stage)
         .select(col("ts"), col("event_type"), col("value"))
         .withWatermark("ts", "2 days")
         .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-      withDrainConf(s) {
-        val q = windows.writeStream
-          .foreachBatch { (df: DataFrame, _: Long) =>
-            df.withColumn("wave", lit(wave)).write.mode("append").parquet(out.toString)
-            ()
-          }
-          .outputMode(OutputMode.Append())
-          .option("checkpointLocation", work.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      drainStream(s, windows, OutputMode.Append(), Some(work.resolve("ckpt").toString))(
+        eachBatch { (df, _) =>
+          df.withColumn("wave", lit(wave)).write.mode("append").parquet(out.toString)
+        })
     }
 
-    writeChunk(0); writeChunk(1); drainWave(1L)
-    writeChunk(2); writeChunk(3); drainWave(2L)
+    (0 to 1).foreach(writeChunk(chunked, stage, _)); drainWave(1L)
+    (2 to 3).foreach(writeChunk(chunked, stage, _)); drainWave(2L)
 
     val res = s.read.parquet(out.toString).localCheckpoint(true)
     deleteRecursively(work)
@@ -1875,11 +1726,9 @@ object StreamingQueries extends QueryModule {
     * batch [[graft.operators.Retrieval.postingsStore]] rebuild.
     */
   def streamPostings(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
+    import java.nio.file.Files
     import graft.operators.Retrieval
-    val stage = Paths.get(sys.props("java.io.tmpdir"), "graft_work",
-      s"postream_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val stage = scratchDir("postream")
     val crawl = stage.resolve("crawl")
     val versions = stage.resolve("versions")
     Files.createDirectories(crawl)
@@ -1887,19 +1736,8 @@ object StreamingQueries extends QueryModule {
     val d = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
     // mtime-ascending single files so the file source orders the batches
     // deterministically (StateProbe's replay idiom)
-    def writeBatch(name: String, df: DataFrame, mtime: Long): Unit = {
-      val tmp = stage.resolve(s"build_$name")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      val part =
-        try listing.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().orElseThrow()
-        finally listing.close()
-      val dest = crawl.resolve(s"$name.parquet")
-      Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(mtime))
-      deleteRecursively(tmp)
-    }
+    def writeBatch(name: String, df: DataFrame, mtime: Long): Unit =
+      Staging.writeOneFile(df, crawl.resolve(s"$name.parquet"), mtime)
     val t0 = 1700000000000L
     writeBatch("b0", d.filter(col("doc_id") % 3 === 0), t0)
     writeBatch("b1",
@@ -1915,30 +1753,22 @@ object StreamingQueries extends QueryModule {
       t0 + 120000)
     val schema = s.read.parquet(crawl.resolve("b0.parquet").toString).schema
     val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-    withDrainConf(s) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(crawl.toString)
-        .writeStream
-        .foreachBatch { (df: DataFrame, id: Long) =>
-          val next = Option(latest.get()) match {
-            case None =>
-              Retrieval.postingsStore(df, col("doc_id"), col("text"))
-                .withColumn("src", lit(s"b$id"))
-            case Some(p) =>
-              Retrieval.upsertPostings(df, s.read.parquet(p),
-                col("doc_id"), col("text"), s"b$id")
-          }
-          val out = versions.resolve(s"v$id").toString
-          next.write.mode("overwrite").parquet(out)
-          latest.set(out)
-          ()
-        }
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val crawlStream = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(crawl.toString)
+    drainStream(s, crawlStream, OutputMode.Append())(eachBatch { (df, id) =>
+      val next = Option(latest.get()) match {
+        case None =>
+          Retrieval.postingsStore(df, col("doc_id"), col("text"))
+            .withColumn("src", lit(s"b$id"))
+        case Some(p) =>
+          Retrieval.upsertPostings(df, s.read.parquet(p),
+            col("doc_id"), col("text"), s"b$id")
+      }
+      val out = versions.resolve(s"v$id").toString
+      next.write.mode("overwrite").parquet(out)
+      latest.set(out)
+    })
     // the pin requires the drain to have been genuinely multi-batch
     require(latest.get() != null && latest.get().endsWith("v2"),
       s"expected 3 micro-batches (maxFilesPerTrigger=1), last store version: ${latest.get()}")
@@ -1998,11 +1828,8 @@ object StreamingQueries extends QueryModule {
     * definition — stream-cadence maintenance ≡ a batch re-assignment.
     */
   def streamAssignments(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    import graft.operators.Similarity
-    val stage = Paths.get(sys.props("java.io.tmpdir"), "graft_work",
-      s"ivfstream_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    import java.nio.file.Files
+    val stage = scratchDir("ivfstream")
     val crawl = stage.resolve("crawl")
     val versions = stage.resolve("versions")
     Files.createDirectories(crawl)
@@ -2017,25 +1844,12 @@ object StreamingQueries extends QueryModule {
                                     stage: java.nio.file.Path,
                                     crawl: java.nio.file.Path,
                                     versions: java.nio.file.Path): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     import graft.operators.Similarity
     val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val cents = e.filter(col("vec_id") < 8).localCheckpoint(true)
     val nonPalin = col("embedding") =!= reverse(col("embedding"))
-    def writeBatch(name: String, df: DataFrame, mtime: Long): Unit = {
-      val tmp = stage.resolve(s"build_$name")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      val part =
-        try listing.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().orElseThrow()
-        finally listing.close()
-      val dest = crawl.resolve(s"$name.parquet")
-      Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(mtime))
-      deleteRecursively(tmp)
-    }
+    def writeBatch(name: String, df: DataFrame, mtime: Long): Unit =
+      Staging.writeOneFile(df, crawl.resolve(s"$name.parquet"), mtime)
     val t0 = 1700000000000L
     writeBatch("b0", e.filter(col("vec_id") % 3 === 0), t0)
     writeBatch("b1",
@@ -2052,29 +1866,21 @@ object StreamingQueries extends QueryModule {
       t0 + 120000)
     val schema = s.read.parquet(crawl.resolve("b0.parquet").toString).schema
     val latest = new java.util.concurrent.atomic.AtomicReference[String](null)
-    withDrainConf(s) {
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(crawl.toString)
-        .writeStream
-        .foreachBatch { (df: DataFrame, id: Long) =>
-          val next = Option(latest.get()) match {
-            case None =>
-              Similarity.assignmentStore(df, cents)
-                .withColumn("src", lit(s"b$id"))
-            case Some(p) =>
-              Similarity.upsertAssignments(df, s.read.parquet(p), cents, s"b$id")
-          }
-          val out = versions.resolve(s"v$id").toString
-          next.write.mode("overwrite").parquet(out)
-          latest.set(out)
-          ()
-        }
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    val crawlStream = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(crawl.toString)
+    drainStream(s, crawlStream, OutputMode.Append())(eachBatch { (df, id) =>
+      val next = Option(latest.get()) match {
+        case None =>
+          Similarity.assignmentStore(df, cents)
+            .withColumn("src", lit(s"b$id"))
+        case Some(p) =>
+          Similarity.upsertAssignments(df, s.read.parquet(p), cents, s"b$id")
+      }
+      val out = versions.resolve(s"v$id").toString
+      next.write.mode("overwrite").parquet(out)
+      latest.set(out)
+    })
     require(latest.get() != null && latest.get().endsWith("v2"),
       s"expected 3 micro-batches (maxFilesPerTrigger=1), last store version: ${latest.get()}")
     // eager checkpoint: the result must be materialized BEFORE the
@@ -2128,31 +1934,21 @@ object StreamingQueries extends QueryModule {
     * are batch-local, so batch boundaries cannot change the result).
     */
   def streamDecontam(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Paths
     val docs = Tables(s, dir, "documents")
     val eval = docs.filter(col("doc_id") % 17 === 0).select(col("doc_id"), col("text"))
       .localCheckpoint(false) // one materialization, joined per micro-batch
-    val out = Paths.get(sys.props("java.io.tmpdir"), "graft_work",
-      s"q89_out_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    val out = scratchDir("q89_out")
     val stream = docsStream(s, dir).filter(col("doc_id") % 17 =!= 0)
-    withDrainConf(s) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val flagged = graft.operators.Dedup.contaminationPairs(
-            batch, col("doc_id"), col("text"),
-            eval, col("doc_id"), col("text"),
-            w = 3, minShared = 3)
-            .select(col("train_id").as("doc_id")).distinct()
-          batch.join(flagged, Seq("doc_id"), "left_anti")
-            .select(col("doc_id"))
-            .write.mode("append").parquet(out.toString)
-          ()
-        }
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drainStream(s, stream, OutputMode.Append())(eachBatch { (batch, _) =>
+      val flagged = graft.operators.Dedup.contaminationPairs(
+        batch, col("doc_id"), col("text"),
+        eval, col("doc_id"), col("text"),
+        w = 3, minShared = 3)
+        .select(col("train_id").as("doc_id")).distinct()
+      batch.join(flagged, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"))
+        .write.mode("append").parquet(out.toString)
+    })
     val res = s.read.parquet(out.toString).localCheckpoint(true)
     deleteRecursively(out)
     res.orderBy(col("doc_id"))
@@ -2206,7 +2002,7 @@ object StreamingQueries extends QueryModule {
       .transformWithState(new UserStatsProcessor, TimeMode.None(), OutputMode.Update())
 
     val out = drain(s, updated.toDF("user_id", "n_events", "sum_cents", "max_value"),
-      OutputMode.Update(), tws = true)
+      OutputMode.Update())
     out.groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("sum_cents"), col("max_value"))).as("f"))
       .select(col("user_id"), col("f.n_events"), col("f.sum_cents"), col("f.max_value"))
@@ -2225,7 +2021,7 @@ object StreamingQueries extends QueryModule {
     val counts = stream.groupByKey(_._1)
       .transformWithState(new TypeCountsProcessor,
         TimeMode.None(), OutputMode.Update())
-    drain(s, counts.toDF("user_id", "event_type", "n"), OutputMode.Update(), tws = true)
+    drain(s, counts.toDF("user_id", "event_type", "n"), OutputMode.Update())
       .groupBy(col("user_id"), col("event_type"))
       .agg(max(col("n")).as("n"))
       .orderBy(col("user_id"), col("event_type"))
@@ -2250,8 +2046,7 @@ object StreamingQueries extends QueryModule {
     val decisions = stream.groupByKey(_._1)
       .transformWithState(new TokenBucketProcessor,
         TimeMode.None(), OutputMode.Update())
-    drain(s, decisions.toDF("user_id", "event_id", "allowed"), OutputMode.Update(),
-      tws = true)
+    drain(s, decisions.toDF("user_id", "event_id", "allowed"), OutputMode.Update())
       .groupBy(col("user_id"))
       .agg(sum(col("allowed")).as("n_allowed"),
         (count(lit(1)) - sum(col("allowed"))).as("n_denied"))
@@ -2300,7 +2095,7 @@ object StreamingQueries extends QueryModule {
       .as[(Long, Long, Long, Long)]
     val lastk = stream.groupByKey(_._1)
       .transformWithState(new LastKProcessor, TimeMode.None(), OutputMode.Update())
-    drainBatches(s, lastk.toDF("user_id", "last3"), OutputMode.Update(), tws = true)
+    drainBatches(s, lastk.toDF("user_id", "last3"), OutputMode.Update())
       .groupBy(col("user_id"))
       .agg(expr("max_by(last3, emit_batch)").as("last3"))
       .orderBy(col("user_id"))
@@ -2521,7 +2316,7 @@ object StreamingQueries extends QueryModule {
       .transformWithState(new SessionTimerProcessor,
         TimeMode.EventTime(), OutputMode.Append())
     drain(s, sess.toDF("user_id", "start_ms", "n_events", "sum_cents"),
-        OutputMode.Append(), tws = true)
+        OutputMode.Append())
       .orderBy(col("user_id"), col("start_ms"))
   }
 
@@ -2601,9 +2396,8 @@ object StreamingQueries extends QueryModule {
     * rename per batch, no coordination.
     */
   def exactlyOnceSink(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val out = Paths.get(sys.props("java.io.tmpdir"), "graft_work",
-      s"eo_out_${java.util.UUID.randomUUID().toString.replace("-", "")}")
+    import java.nio.file.Files
+    val out = scratchDir("eo_out")
     Files.createDirectories(out)
     val invocations = new java.util.concurrent.atomic.AtomicLong(0)
     val commits = new java.util.concurrent.atomic.AtomicLong(0)
@@ -2623,17 +2417,10 @@ object StreamingQueries extends QueryModule {
       .withWatermark("ts", "2 days")
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
-    withDrainConf(s) {
-      val q = windows.writeStream
-        .foreachBatch { (df: DataFrame, id: Long) =>
-          writeOnce(df, id)
-          writeOnce(df, id) // the post-sink-crash redelivery, for EVERY batch
-        }
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    drainStream(s, windows, OutputMode.Append())(eachBatch { (df, id) =>
+      writeOnce(df, id)
+      writeOnce(df, id) // the post-sink-crash redelivery, for EVERY batch
+    })
     require(invocations.get == 2 * commits.get,
       s"exactly-once violated: ${invocations.get} invocations, ${commits.get} commits")
     val read = s.read.parquet(

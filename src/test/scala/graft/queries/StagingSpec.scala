@@ -2,7 +2,7 @@ package graft.queries
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkSpec
+import graft.{SparkSpec, Staging}
 
 /** Pins the stream-stage invalidation contract (VERDICT r7 #2): staging
   * keyed on bare `Files.exists(dest)` silently served PRE-REGENERATION
@@ -22,22 +22,22 @@ class StagingSpec extends SparkSpec {
         Files.write(src, "generation-1".getBytes("UTF-8"))
 
         // never staged → stale
-        assert(StreamingQueries.stageStale(src, stage))
-        StreamingQueries.recordStaged(src, stage)
+        assert(Staging.stale(src, stage))
+        Staging.record(src, stage)
         // unchanged source → fresh (no needless re-copy)
-        assert(!StreamingQueries.stageStale(src, stage))
+        assert(!Staging.stale(src, stage))
 
         // the regeneration scenario: same path, new bytes (size change)
         Files.write(src, "generation-2-longer".getBytes("UTF-8"))
-        assert(StreamingQueries.stageStale(src, stage))
-        StreamingQueries.recordStaged(src, stage)
-        assert(!StreamingQueries.stageStale(src, stage))
+        assert(Staging.stale(src, stage))
+        Staging.record(src, stage)
+        assert(!Staging.stale(src, stage))
 
         // same size, different mtime (in-place rewrite) → stale
         Files.setLastModifiedTime(src,
           java.nio.file.attribute.FileTime.fromMillis(
             Files.getLastModifiedTime(src).toMillis + 60000L))
-        assert(StreamingQueries.stageStale(src, stage))
+        assert(Staging.stale(src, stage))
       }
     }
 
@@ -49,7 +49,7 @@ class StagingSpec extends SparkSpec {
         Files.write(src, "data".getBytes("UTF-8"))
         // simulate a pre-fix stage: dest exists but no signature marker
         Files.write(stage.resolve("events.parquet"), "stale-copy".getBytes("UTF-8"))
-        assert(StreamingQueries.stageStale(src, stage))
+        assert(Staging.stale(src, stage))
       }
     }
   }
